@@ -4,6 +4,7 @@ process-tree memory sampler and the Spark session lifecycle."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import platform
 import shutil
@@ -73,8 +74,8 @@ def pin_tree(cpus) -> None:
 
 
 def driver_mem_mb() -> int:
-    """Driver heap sized from physical RAM: an eighth, within 1-4 GiB
-    (the inputs are small; the machine is shared)."""
+    """Driver heap ceiling sized from physical RAM: an eighth, within
+    1-4 GiB (the inputs are small; the machine is shared)."""
     return max(1024, min(4096, ram_mb() // 8))
 
 
@@ -104,12 +105,12 @@ def export_env(cores: int) -> None:
 
 
 def java_opts() -> str:
-    """Fixed, pre-touched heap: no heap resizing during a run, and the
-    JVM's resident size no longer depends on when GC ran. No perf-data
-    file and no temp files outside the checkout."""
-    mem = driver_mem_mb()
-    return (f"-XX:+UseParallelGC -Xms{mem}m -XX:+AlwaysPreTouch "
-            f"-XX:-UsePerfData -Djava.io.tmpdir={os.path.join(CACHE, 'tmp')}")
+    """The heap's ceiling is fixed (``spark.driver.memory``), its resident
+    size is not: no -Xms, no pre-touch, so the JVM's memory use shows in
+    ``peak_pss_mb``. No perf-data file and no temp files outside the
+    checkout."""
+    return ("-XX:+UseParallelGC -XX:-UsePerfData "
+            f"-Djava.io.tmpdir={os.path.join(CACHE, 'tmp')}")
 
 
 def hardware(cpus: list[int], spark) -> dict:
@@ -175,24 +176,51 @@ def steal_s() -> float:
         return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
 
 
+def host_loop_s(n: int = 1_000_000, reps: int = 3) -> float:
+    """Median seconds of a fixed single-thread Python loop: a gauge of the
+    host's speed at that moment (the detail record's ``host_loop_s``),
+    never part of a metric."""
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        x = 0
+        for i in range(n):
+            x += i * i
+        times.append(time.perf_counter() - t0)
+    return sorted(times)[reps // 2]
+
+
 class MemSampler:
     """Peak memory (sum of PSS) of this process and all its descendants
-    (JVM, Python daemon and workers), sampled every `period` seconds."""
+    (JVM, Python daemon and workers), sampled every `period` seconds
+    while switched on with ``on()`` (set-up and the timed window, not
+    input generation or the output checks)."""
 
     def __init__(self, period: float = 0.25):
         self.period = period
         self.peak_kb = 0
+        self._active = threading.Event()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self.sample()
+            if self._active.is_set():
+                self.sample()
             self._stop.wait(self.period)
 
     def sample(self) -> None:
         total = sum(_pss_kb(p) for p in process_tree())
         self.peak_kb = max(self.peak_kb, total)
+
+    @contextlib.contextmanager
+    def on(self):
+        self._active.set()
+        try:
+            yield
+        finally:
+            self._active.clear()
+            self.sample()
 
     def __enter__(self) -> "MemSampler":
         self._thread.start()
@@ -201,7 +229,6 @@ class MemSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join(timeout=5)
-        self.sample()
 
     @property
     def peak_mb(self) -> float:

@@ -43,6 +43,7 @@ class Pool:
         from pyproj_spark.operators.extract import extract_anchors
         from pyproj_spark.sources.pages import pages_df
         tmp = self.root + f".tmp{os.getpid()}"
+        self._remove_stale_builds()
         shutil.rmtree(tmp, ignore_errors=True)
         pages = os.path.join(tmp, "pages")
         pages_df(spark, self.files * self.rows_per_file, seed=POOL_SEED,
@@ -61,6 +62,15 @@ class Pool:
         open(os.path.join(tmp, ".complete"), "w").close()
         shutil.rmtree(self.root, ignore_errors=True)
         os.rename(tmp, self.root)
+
+    def _remove_stale_builds(self) -> None:
+        """Delete half-written pools of builds whose process is gone."""
+        parent, base = os.path.split(self.root)
+        for name in os.listdir(parent):
+            pid = name[len(base) + 4:]
+            if name.startswith(base + ".tmp") and pid.isdigit() and \
+                    not os.path.exists(f"/proc/{pid}"):
+                shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
     def ensure(self, spark) -> bool:
         """Build the pool if missing; True when it was already there."""

@@ -1,15 +1,15 @@
 """Benchmark entry point.
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> \
-        --trace <0|1> [--cores 4] [--smoke]
+        --trace <0|1> [--smoke]
 
-Run from the root of a checkout. One run: pin the process to `--cores`
-CPUs, start a fresh local[cores] session (the cold set-up), generate or
-reuse the seeded inputs (timed on their own), set up twice more in the
-same process, run the workload's jobs back to back for `--seconds`,
-check the outputs once, and print one JSON object as the last stdout
-line. ``--trace 0`` reports the end-to-end metrics; ``--trace 1``
-reruns the jobs with spans and Spark's event log on and reports the
+Run from the root of a checkout. One run: pin the process to CORES
+CPUs, start a fresh local[CORES] session (the cold set-up), generate or
+reuse the seeded inputs (timed on their own), run the workload's jobs
+back to back for `--seconds`, check the outputs once, stop the JVM,
+time SETUP_CHILDREN more cold set-ups, each in a fresh child process,
+and print one JSON object as the last stdout line. ``--trace 0``
+reports the end-to-end metrics; ``--trace 1`` reruns the jobs with spans and Spark's event log on and reports the
 per-layer metrics plus the tracing overhead. The line before the result
 is a detail record (hardware, samples, checks).
 
@@ -24,7 +24,9 @@ import itertools
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -35,11 +37,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench import env  # noqa: E402
 
-SETUPS = 3          # set-ups per run; setup_s is their median
+CORES = 4           # local[CORES], pinned to CORES CPUs of the mask (the
+                    # weak-scaling leg's quarter input assumes 4)
+SETUP_CHILDREN = 1  # fresh-process set-ups after the run's own cold one;
+                    # setup_s is the median of all of them
 WARMUP_S = 6.0      # untimed jobs before each measurement ...
-WARMUP_JOBS = 2     # ... and at least this many (smoke: 1)
+WARMUP_JOBS = 4     # ... and at least this many (smoke: 1)
 MIN_JOBS = 3        # timed jobs per run even past --seconds (smoke: 1)
 MAX_FAILED_JOBS = 3
+CHILD_TIMEOUT_S = 60
 
 #: name -> unit. Printed with --trace 0, in BENCHMARK.json's order.
 END_TO_END = {
@@ -126,7 +132,6 @@ class Run:
     def __init__(self, args):
         from perfbench.workloads import WORKLOADS
         self.args = args
-        self.cores = args.cores
         self.workdir = os.path.join(env.CACHE, "work", str(os.getpid()))
         env.remove_stale_workdirs(os.path.dirname(self.workdir))
         self.w = WORKLOADS[args.workload](args.seed, args.smoke,
@@ -137,6 +142,7 @@ class Run:
         self.checks: list = []
         self.spark = None
         self.warmup_s = 0.0 if args.smoke else WARMUP_S
+        self.mem = env.MemSampler()
 
     # -- set-up ------------------------------------------------------
     def warm(self, spark) -> None:
@@ -145,7 +151,7 @@ class Run:
         from pyspark.sql import functions as F
 
         from pyproj_spark.functions.transform import transform_xy
-        (spark.range(0, self.cores * 4, 1, self.cores)
+        (spark.range(0, CORES * 4, 1, CORES)
          .select(transform_xy("EPSG:4326", "EPSG:3857",
                               (F.col("id") % 360 - 180.0).cast("double"),
                               F.lit(10.0)).alias("xy"))
@@ -153,7 +159,7 @@ class Run:
 
     def session(self, extra_conf=None) -> tuple[float, float]:
         t0 = time.perf_counter()
-        self.spark = env.start_session(self.cores, extra_conf)
+        self.spark = env.start_session(CORES, extra_conf)
         t1 = time.perf_counter()
         self.warm(self.spark)
         return t1 - t0, time.perf_counter() - t1
@@ -163,7 +169,10 @@ class Run:
         self.w.prepare(self.spark)
 
     def cold_setup(self) -> float:
-        start, warm = self.session()
+        """Process start -> session -> warm workers -> workload set-up,
+        minus input generation (reported on its own as ``inputs_s``)."""
+        with self.mem.on():
+            start, warm = self.session()
         self.detail["session_start_s"], self.detail["worker_warm_s"] = \
             start, warm
         self.detail["hardware"] = env.hardware(self.detail["cpus"],
@@ -172,15 +181,45 @@ class Run:
         self.detail["inputs"] = self.w.make_inputs(self.spark)
         inputs_s = time.perf_counter() - t0
         self.detail["inputs_s"] = inputs_s
-        self.prepare()
+        with self.mem.on():
+            self.prepare()
         return process_age() - inputs_s
 
-    def restart(self, extra_conf=None) -> float:
-        t0 = time.perf_counter()
+    def child_setups(self) -> list[float]:
+        """SETUP_CHILDREN cold set-ups, one fresh process each
+        (``--setup-only``), one after the other, with no JVM of this run
+        alive. A child that overruns is killed with its JVM and workers
+        (its own process group)."""
+        cmd = [sys.executable, os.path.abspath(__file__),
+               "--workload", self.args.workload,
+               "--seed", str(self.args.seed), "--seconds", "0",
+               "--setup-only"] + (["--smoke"] if self.args.smoke else [])
+        out = []
+        for _ in range(SETUP_CHILDREN):
+            p = subprocess.Popen(cmd, cwd=env.ROOT, stdout=subprocess.PIPE,
+                                 text=True, start_new_session=True)
+            try:
+                stdout, _ = p.communicate(timeout=CHILD_TIMEOUT_S)
+                if p.returncode != 0:
+                    raise RuntimeError(f"exit code {p.returncode}")
+                child = json.loads(stdout.strip().splitlines()[-1])
+                self.detail.setdefault("setup_children", []).append(child)
+                out.append(child["setup_s"])
+                self.w.op(True)
+            except Exception:  # noqa: BLE001 - a failed set-up is counted
+                log(f"set-up child failed:\n{traceback.format_exc()}")
+                self.w.op(False)
+            finally:
+                if p.poll() is None:
+                    os.killpg(p.pid, signal.SIGKILL)
+                    p.wait()
+        return out
+
+    def restart(self, extra_conf=None) -> None:
+        """A new session in the running JVM (traced runs: event log on)."""
         env.stop_session(self.spark)
         self.session(extra_conf)
         self.prepare()
-        return time.perf_counter() - t0
 
     # -- measurement --------------------------------------------------
     def warm_up(self, seconds: float) -> None:
@@ -247,18 +286,30 @@ class Run:
     def end_to_end(self) -> dict:
         from perfbench.trace import NullTracer
         setups = [self.cold_setup()]
-        for _ in range(SETUPS - 1):
-            setups.append(self.restart())
         self.warm_up(self.warmup_s)
-        times, rows, _ = self.measure(NullTracer(), self.args.seconds)
+        loop = [env.host_loop_s()]
+        with self.mem.on():
+            times, rows, _ = self.measure(NullTracer(), self.args.seconds)
+        self.detail["host_loop_s"] = loop + [env.host_loop_s()]
         self.check()
+        env.stop_session(self.spark)
+        self.spark = None
+        env.shutdown_jvm()
+        setups += self.child_setups()
         self.detail["setup_samples_s"] = setups
         self.detail.update(job_stats(times))
         return {
             "setup_s": median(setups),
             "job_s_p50": median(times),
             "rows_per_s": rows / sum(times) if times else 0.0,
+            "peak_pss_mb": self.mem.peak_mb,
         }
+
+    def setup_only(self) -> dict:
+        """One cold set-up in this fresh process (a child of a run)."""
+        return {"setup_s": self.cold_setup(),
+                "session_start_s": self.detail["session_start_s"],
+                "worker_warm_s": self.detail["worker_warm_s"]}
 
     def traced(self) -> dict:
         from perfbench import kernels
@@ -302,12 +353,12 @@ class Run:
         return m
 
     def weak_scaling(self, t_full: float) -> float:
-        """Weak-scaling efficiency from `cores` to 1 CPU: the whole process
+        """Weak-scaling efficiency from 4 CPUs to 1: the whole process
         tree moves to one CPU, a local[1] session runs the jobs on a
-        quarter of the input, and (pages/s at cores) / (cores x pages/s
-        at 1 CPU) = t_quarter_1cpu / t_full_cores when cores == 4.
-        0 for workloads without a quarter-size input."""
-        if self.cores != 4 or not t_full or not self.w.weak_scaling:
+        quarter of the input, and (pages/s at 4) / (4 x pages/s at 1)
+        = t_quarter_1cpu / t_full_4cpu. 0 for workloads without a
+        quarter-size input."""
+        if not t_full or not self.w.weak_scaling:
             return 0.0
         cpus = sorted(os.sched_getaffinity(0))
         env.pin_tree(cpus[:1])
@@ -388,26 +439,30 @@ def layer_metrics(run: Run, tracer, ev, jobs, times, base, iso, rates):
         lambda j: ev.total(sub[j], "py_rows_to"))
     for k, rate in rates.items():
         m[f"kernels.{k}_pts_per_s"] = rate
-    m["kernels.est_core_s"] = sum(
-        pts / rates[k] for k, pts in w.kernel_points_per_job().items())
-    # pip / knn: the workload's own join spans, or the registry query
-    roots, trees = under("pip:join", "query:pip_join")
+    # pip / knn: counters of the workload's own timed join jobs
+    roots, trees = under("pip:join")
     if roots:
         m["pip.join_s"] = median([spans[r].dur for r in roots])
         m["pip.driver_s"] = median([dur_sum(named(t, "pip:pip_join"))
                                     for t in trees])
-        m["pip.candidates"] = iso.get("candidates") or median(
-            [ev.total(t, "py_rows_to") for t in trees])
+        # rows into the exact-test pandas UDF = the exact tests run
+        m["pip.candidates"] = median([ev.total(t, "py_rows_to")
+                                      for t in trees])
         m["pip.hits"] = w.counts.get("pip_hits", 0.0)
         if m["pip.candidates"]:
             m["pip.hit_ratio"] = m["pip.hits"] / m["pip.candidates"]
-    roots, trees = under("knn:join", "query:knn_zones")
+        # the crossing of the exact test: its Python-worker time
+        m["crossing.udf_stage_s"] = median([ev.total(t, "py_run_s")
+                                            for t in trees])
+    roots, trees = under("knn:join")
     if roots:
         m["knn.s"] = median([spans[r].dur for r in roots])
         m["knn.candidates"] = median([ev.total(t, "generate_rows")
                                       for t in trees])
         m["knn.geod_calls"] = median([ev.total(t, "py_rows_to")
                                       for t in trees])
+    m["kernels.est_core_s"] = sum(
+        pts / rates[k] for k, pts in w.kernel_points(m).items())
     m["tiling.raster_s"] = iso.get("raster_s", 0.0)
     m["tiling.tiles_out"] = iso.get("tiles_out", 0.0)
     m["tiling.files_written"] = iso.get("files_written", 0.0)
@@ -444,9 +499,10 @@ def parse(argv):
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument("--cores", type=int, default=4)
     p.add_argument("--smoke", action="store_true",
                    help="tiny inputs, one job: checks the plumbing")
+    p.add_argument("--setup-only", action="store_true",
+                   help="internal: one cold set-up, as a child of a run")
     return p.parse_args(argv)
 
 
@@ -460,25 +516,31 @@ def main(argv=None) -> int:
         args.seconds = 0.0
     try:
         env.preflight()
-        cpus = env.pin(args.cores)
+        cpus = env.pin(CORES)
     except env.BenchError as e:
         log(str(e))
         return 2
-    env.export_env(args.cores)
+    env.export_env(CORES)
     run = Run(args)
     run.detail["cpus"] = cpus
     steal0 = env.steal_s()
     try:
-        with env.MemSampler() as mem:
-            metrics = run.traced() if args.trace else run.end_to_end()
+        with run.mem:
+            if args.setup_only:
+                metrics = run.setup_only()
+            elif args.trace:
+                metrics = run.traced()
+            else:
+                metrics = run.end_to_end()
     finally:
         if run.spark is not None:
             env.stop_session(run.spark)
         env.shutdown_jvm()
         shutil.rmtree(run.workdir, ignore_errors=True)
+    if args.setup_only:
+        print(json.dumps(metrics))
+        return 0
     units = PER_LAYER if args.trace else END_TO_END
-    if not args.trace:
-        metrics["peak_pss_mb"] = mem.peak_mb
     run.detail["checks"] = run.checks
     run.detail["machine_steal_s"] = env.steal_s() - steal0
     run.detail["wall_s"] = time.perf_counter() - _T_IMPORT

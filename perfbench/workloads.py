@@ -157,7 +157,9 @@ class Workload:
         """(lon, lat) arrays of the workload's own points."""
         raise NotImplementedError
 
-    def kernel_points_per_job(self) -> dict:
+    def kernel_points(self, m: dict) -> dict:
+        """kernel name -> points one timed job sends through it, from the
+        traced run's per-layer metrics `m`."""
         return {}
 
     #: whether quarter() exists (the 1-CPU leg of the weak-scaling run)
@@ -300,9 +302,12 @@ class TilePages(Workload):
         _x, _y, _c, lon, lat = self.reference()
         return lon, lat
 
-    def kernel_points_per_job(self) -> dict:
-        _x, _y, codes, lon, _lat = self.reference()
-        return {"webmerc": len(lon), "tm_helmert": int((codes == 2100).sum())}
+    def kernel_points(self, m: dict) -> dict:
+        # every row into the scalar crossing is projected to Web Mercator;
+        # the EPSG:2100 anchors also take the TM + Helmert leg
+        codes = self.reference()[2]
+        return {"webmerc": m["crossing.rows_to_python"],
+                "tm_helmert": int((codes == 2100).sum())}
 
 
 # ---------------------------------------------------------- zone join
@@ -373,10 +378,12 @@ class ZoneJoin(Workload):
             if len(ii):
                 hit = point_in_ring_np(lon[ii], lat[ii], rl, rb)
                 want.update((int(a), zid) for a in aid[ii][hit])
-        got = {(r["aid"], r["zone_id"]) for r in self.pip_df().collect()}
-        res = [("pip_pairs", got == want,
-                f"{len(got)} pairs vs brute force {len(want)}")]
-        self.counts["pip_hits"] = len(got)
+        rows = self.pip_df().collect()
+        got = {(r["aid"], r["zone_id"]) for r in rows}
+        res = [("pip_pairs", got == want and len(rows) == len(want),
+                f"{len(rows)} rows, {len(got)} distinct pairs vs brute "
+                f"force {len(want)}")]
+        self.counts["pip_hits"] = len(rows)
         # exact kNN on the first knn_check sampled anchors, brute force
         # over every zone centroid (ring-order sums, as the operator)
         cent = []
@@ -413,31 +420,15 @@ class ZoneJoin(Workload):
         return res
 
     def isolate(self, spark, tracer) -> dict:
-        from pyspark.sql import functions as F
-
-        from pyproj_spark.functions import cells
-        a = self.anchors.withColumn(
-            "cell", cells.cell_of(F.col("lon"), F.col("lat"),
-                                  cells.DEFAULT_RES))
-        zc = self.zones.select("zone_id", F.explode("cells").alias("cell"))
-        cand = a.join(F.broadcast(zc), "cell").select("aid", "zone_id")
-        t = isolated(tracer, {"scan_s": self.anchors, "cand_s": cand,
-                              "pip_s": self.pip_df()})
-        self.counts["candidates"] = float(cand.count())
-        return {"scan_s": t["scan_s"],
-                "udf_stage_s": t["pip_s"] - t["cand_s"],
-                "candidates": self.counts["candidates"]}
+        # pip and knn counters come from the timed jobs' own event log
+        return isolated(tracer, {"scan_s": self.anchors})
 
     def points(self):
         _aid, lon, lat = self.reference()
         return lon, lat
 
-    def kernel_points_per_job(self) -> dict:
-        aid = self.reference()[0]
-        n_knn = int((aid % self.sizes["knn_mod"] == 0).sum())
-        # exact tests = candidate rows; the operator re-ranks 25 per point
-        return {"pip": self.counts.get("candidates", len(aid)),
-                "geod_inv": 25 * n_knn}
+    def kernel_points(self, m: dict) -> dict:
+        return {"pip": m["pip.candidates"], "geod_inv": m["knn.geod_calls"]}
 
 
 # ------------------------------------------- materialization (traced)
