@@ -66,6 +66,7 @@ class Pool:
     def _remove_stale_builds(self) -> None:
         """Delete half-written pools of builds whose process is gone."""
         parent, base = os.path.split(self.root)
+        os.makedirs(parent, exist_ok=True)
         for name in os.listdir(parent):
             pid = name[len(base) + 4:]
             if name.startswith(base + ".tmp") and pid.isdigit() and \
