@@ -1,12 +1,14 @@
-"""Spark column functions for CRS transforms — scalar pandas/Arrow UDFs.
+"""Spark column functions for CRS transforms — scalar Arrow UDFs.
 
 One Arrow batch in -> one out, never per-row Python (the engine-wide
-rule from BASELINE.json input_hint). The TransformSpec is resolved on
-the driver (plan once — reference ``docs/advanced_examples.rst:269-291``
-shows why) and captured in the UDF closure; each python worker
-materializes the numpy kernel once per spec via the module-level cache
-in ``pyproj_spark.plans.spec`` (the Spark analogue of the reference's
-per-thread ``TransformerLocal``, ``pyproj/transformer.py:416-474``).
+rule from BASELINE.json input_hint). Every numpy-kernel column crosses
+into Python through the one adapter below, :func:`_numpy_udf`. The
+TransformSpec is resolved on the driver (plan once — reference
+``docs/advanced_examples.rst:269-291`` shows why) and captured in the
+UDF closure; each python worker materializes the numpy kernel once per
+spec via the module-level cache in ``pyproj_spark.plans.spec`` (the
+Spark analogue of the reference's per-thread ``TransformerLocal``,
+``pyproj/transformer.py:416-474``).
 
 Noop elision: if src == dst CRS the returned Column is built from the
 input columns directly — no UDF enters the plan at all
@@ -15,8 +17,9 @@ input columns directly — no UDF enters the plan at all
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd  # noqa: F401 — kept for callers' type hints
 import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -24,6 +27,51 @@ from pyspark.sql.functions import arrow_udf
 
 from pyproj_spark.crs.crs import CRS
 from pyproj_spark.plans.spec import TransformSpec, get_kernel
+
+#: numpy dtype for each Arrow field type the adapter packs
+_DTYPES = {"double": np.float64, "int": np.int32, "boolean": np.bool_}
+
+
+def _f64(arr: pa.Array) -> np.ndarray:
+    """Arrow column -> float64 numpy array (nulls become NaN)."""
+    return np.asarray(arr.to_numpy(zero_copy_only=False), dtype=np.float64)
+
+
+def _numpy_udf(fn, ddl: str):
+    """The one Python crossing for numpy kernels: an ``arrow_udf``
+    returning ``ddl`` — ``boolean`` or ``struct<name:double|int,...>`` —
+    that calls ``fn`` on float64 numpy arrays of its argument columns
+    and packs what it returns (one array, or one per struct field in
+    order) into that Arrow type."""
+    if ddl.startswith("struct<"):
+        fields = [f.split(":") for f in ddl[len("struct<"):-1].split(",")]
+
+        def pack(out):
+            return pa.StructArray.from_arrays(
+                [pa.array(np.asarray(o, dtype=_DTYPES[t]))
+                 for o, (_, t) in zip(out, fields, strict=True)],
+                names=[n for n, _ in fields])
+    else:
+        def pack(out):
+            return pa.array(np.asarray(out, dtype=_DTYPES[ddl]))
+
+    @arrow_udf(ddl)
+    def _udf(*cols: pa.Array) -> pa.Array:
+        return pack(fn(*map(_f64, cols)))
+
+    return _udf
+
+
+def _groups(keys: np.ndarray):
+    """Yield ``(key, row indices)`` per distinct key of a batch, from
+    one argsort (a NaN key is its own group). The indices of a key come
+    in no fixed order: callers run elementwise kernels on them."""
+    if len(keys) == 0:
+        return
+    order = np.argsort(keys)
+    k = keys[order]
+    for ii in np.split(order, np.flatnonzero(k[1:] != k[:-1]) + 1):
+        yield keys[ii[0]], ii
 
 
 def transform_xy(crs_from, crs_to, x: Column, y: Column,
@@ -54,28 +102,14 @@ def transform_xy(crs_from, crs_to, x: Column, y: Column,
                         y.cast("double").alias("y"))
 
     if with_op_id:
-        @arrow_udf("struct<x:double,y:double,op_id:int>")
-        def _xf_op(xs: pa.Array, ys: pa.Array) -> pa.Array:
-            k = get_kernel(spec)
-            xo, yo, _, ops = k.call_with_ops(
-                xs.to_numpy(zero_copy_only=False),
-                ys.to_numpy(zero_copy_only=False))
-            return pa.StructArray.from_arrays(
-                [pa.array(xo), pa.array(yo),
-                 pa.array(ops.astype("int32"))],
-                names=["x", "y", "op_id"])
+        def _xy_op(xs, ys):
+            xo, yo, _, ops = get_kernel(spec).call_with_ops(xs, ys)
+            return xo, yo, ops
 
-        return _xf_op(x, y)
-
-    @arrow_udf("struct<x:double,y:double>")
-    def _xf(xs: pa.Array, ys: pa.Array) -> pa.Array:
-        k = get_kernel(spec)
-        xo, yo, _ = k(xs.to_numpy(zero_copy_only=False),
-                      ys.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
-
-    return _xf(x, y)
+        return _numpy_udf(_xy_op, "struct<x:double,y:double,op_id:int>")(
+            x, y)
+    return _numpy_udf(lambda xs, ys: get_kernel(spec)(xs, ys)[:2],
+                      "struct<x:double,y:double>")(x, y)
 
 
 def transform_xy_keyed(crs_from, crs_by_key: dict, key: Column,
@@ -87,7 +121,7 @@ def transform_xy_keyed(crs_from, crs_by_key: dict, key: Column,
     ``Transformer`` per pair (pyproj/transformer.py:184-230) and loops;
     at 100 TB a per-zone branch-and-union would rescan the source once
     per zone, so the zone dispatch moves inside the kernel: rows are
-    masked per key in numpy and each sub-batch goes through the planned
+    grouped per key in numpy and each sub-batch goes through the planned
     per-worker cached kernel. Rows whose key is absent from the map
     come back NaN (like errcheck=False out-of-domain points).
     """
@@ -97,25 +131,14 @@ def transform_xy_keyed(crs_from, crs_by_key: dict, key: Column,
                                    always_xy=always_xy)
              for k, v in crs_by_key.items()}
 
-    @arrow_udf("struct<x:double,y:double>")
-    def _xfk(keys: pa.Array, xs: pa.Array, ys: pa.Array) -> pa.Array:
-        kn = keys.to_numpy(zero_copy_only=False)
-        xn = np.asarray(xs.to_numpy(zero_copy_only=False),
-                        dtype="float64")
-        yn = np.asarray(ys.to_numpy(zero_copy_only=False),
-                        dtype="float64")
-        xo = np.full(len(xn), np.nan)
-        yo = np.full(len(yn), np.nan)
-        for kv, spec in specs.items():
-            m = kn == kv
-            if m.any():
-                kern = get_kernel(spec)
-                xm, ym, _ = kern(xn[m], yn[m])
-                xo[m], yo[m] = xm, ym
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
+    def _keyed(keys, xs, ys):
+        xo, yo = np.full(len(xs), np.nan), np.full(len(ys), np.nan)
+        for kv, ii in _groups(keys):
+            if kv in specs:
+                xo[ii], yo[ii], _ = get_kernel(specs[kv])(xs[ii], ys[ii])
+        return xo, yo
 
-    return _xfk(key, x, y)
+    return _numpy_udf(_keyed, "struct<x:double,y:double>")(key, x, y)
 
 
 def transform_xyz(crs_from, crs_to, x: Column, y: Column, z: Column,
@@ -128,21 +151,14 @@ def transform_xyz(crs_from, crs_to, x: Column, y: Column, z: Column,
         return F.struct(x.cast("double").alias("x"),
                         y.cast("double").alias("y"),
                         z.cast("double").alias("z"))
-
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _xf(xs: pa.Array, ys: pa.Array, zs: pa.Array) -> pa.Array:
-        k = get_kernel(spec)
-        xo, yo, zo = k(xs.to_numpy(zero_copy_only=False),
-                       ys.to_numpy(zero_copy_only=False),
-                       zs.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
-
-    return _xf(x, y, z)
+    return _numpy_udf(lambda xs, ys, zs: get_kernel(spec)(xs, ys, zs),
+                      "struct<x:double,y:double,z:double>")(x, y, z)
 
 
-_PIPELINE_CACHE: dict = {}
+@functools.cache
+def _pipeline_kernel(pipeline: str):
+    from pyproj_spark.plans.pipeline import PipelineKernel
+    return PipelineKernel(pipeline)
 
 
 def transform_pipeline(pipeline: str, x: Column, y: Column,
@@ -151,31 +167,20 @@ def transform_pipeline(pipeline: str, x: Column, y: Column,
     struct<x,y,z>. The DataFrame form of the reference's
     ``Transformer.from_pipeline(...).transform(...)``
     (``pyproj/transformer.py:270-330``): the string is validated on the
-    driver, each python worker parses it once (module cache keyed by
-    the string — the kernel holds only step closures), and whole Arrow
-    batches cross in one call."""
-    from pyproj_spark.plans.pipeline import PipelineKernel
-    PipelineKernel(pipeline)  # driver-side validation: raise HERE
-
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _pl(xs: pa.Array, ys: pa.Array, zs: pa.Array) -> pa.Array:
-        k = _PIPELINE_CACHE.get(pipeline)
-        if k is None:
-            from pyproj_spark.plans.pipeline import PipelineKernel as PK
-            k = _PIPELINE_CACHE[pipeline] = PK(pipeline)
-        xo, yo, zo = k(
-            np.asarray(xs.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(ys.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(zs.to_numpy(zero_copy_only=False), dtype="float64"))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
-
+    driver, each python worker parses it once (cached by the string —
+    the kernel holds only step closures), and whole Arrow batches cross
+    in one call."""
+    _pipeline_kernel(pipeline)  # driver-side validation: raise HERE
     zc = F.lit(0.0) if z is None else z.cast("double")
-    return _pl(x, y, zc)
+    return _numpy_udf(
+        lambda xs, ys, zs: _pipeline_kernel(pipeline)(xs, ys, zs),
+        "struct<x:double,y:double,z:double>")(x, y, zc)
 
 
-_ITRF_CACHE: dict = {}
+@functools.cache
+def _itrf(frame_from: str, frame_to: str):
+    from pyproj_spark.kernels.itrf import ITRFTransformer
+    return ITRFTransformer(frame_from, frame_to)
 
 
 def transform_itrf(frame_from: str, frame_to: str, x: Column, y: Column,
@@ -187,105 +192,53 @@ def transform_itrf(frame_from: str, frame_to: str, x: Column, y: Column,
     published IERS rates are evaluated at each row's decimal year
     before the 14-parameter Helmert applies. Frames are validated on
     the driver; workers cache one kernel per frame pair."""
-    from pyproj_spark.kernels.itrf import ITRFTransformer
-    ITRFTransformer(frame_from, frame_to)  # driver-side validation
-    key = (frame_from, frame_to)
+    _itrf(frame_from, frame_to)  # driver-side validation
 
-    @arrow_udf("struct<x:double,y:double,z:double>")
-    def _itrf(xs: pa.Array, ys: pa.Array, zs: pa.Array,
-              ts: pa.Array) -> pa.Array:
-        tr = _ITRF_CACHE.get(key)
-        if tr is None:
-            from pyproj_spark.kernels.itrf import ITRFTransformer as IT
-            tr = _ITRF_CACHE[key] = IT(*key)
-        xo, yo, zo, _ = tr.transform(
-            np.asarray(xs.to_numpy(zero_copy_only=False), dtype="float64"),
-            np.asarray(ys.to_numpy(zero_copy_only=False), dtype="float64"),
-            zz=np.asarray(zs.to_numpy(zero_copy_only=False),
-                          dtype="float64"),
-            tt=np.asarray(ts.to_numpy(zero_copy_only=False),
-                          dtype="float64"))
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo), pa.array(zo)],
-            names=["x", "y", "z"])
+    def _fn(xs, ys, zs, ts):
+        return _itrf(frame_from, frame_to).transform(xs, ys, zz=zs,
+                                                     tt=ts)[:3]
 
-    return _itrf(x.cast("double"), y.cast("double"),
-                 z.cast("double"), t.cast("double"))
+    return _numpy_udf(_fn, "struct<x:double,y:double,z:double>")(
+        x.cast("double"), y.cast("double"), z.cast("double"),
+        t.cast("double"))
+
+
+@functools.cache
+def _geod(ellps: str):
+    from pyproj_spark.kernels.geod import Geod
+    return Geod(ellps=ellps)
 
 
 def geod_inverse(ellps: str, lon1: Column, lat1: Column, lon2: Column,
                  lat2: Column) -> Column:
-    """struct<az12,az21,dist> — Karney inverse as a pandas UDF.
+    """struct<az12,az21,dist> — Karney inverse as an Arrow UDF.
     az21 is the back azimuth (pyproj default convention,
     ``pyproj/_geod.pyx:294-295``)."""
-
-    @arrow_udf("struct<az12:double,az21:double,dist:double>")
-    def _inv(a: pa.Array, b: pa.Array, c: pa.Array,
-             d: pa.Array) -> pa.Array:
-        g = _geod_cache(ellps)
-        az12, az21, dist = g.inv(a.to_numpy(zero_copy_only=False),
-                                 b.to_numpy(zero_copy_only=False),
-                                 c.to_numpy(zero_copy_only=False),
-                                 d.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(az12, dtype="float64")),
-             pa.array(np.asarray(az21, dtype="float64")),
-             pa.array(np.asarray(dist, dtype="float64"))],
-            names=["az12", "az21", "dist"])
-
-    return _inv(lon1, lat1, lon2, lat2)
+    return _numpy_udf(lambda *a: _geod(ellps).inv(*a),
+                      "struct<az12:double,az21:double,dist:double>")(
+        lon1, lat1, lon2, lat2)
 
 
 def geod_forward(ellps: str, lon: Column, lat: Column, az: Column,
                  dist: Column) -> Column:
-    """struct<lon,lat,backaz> — Karney direct as a pandas UDF."""
-
-    @arrow_udf("struct<lon:double,lat:double,backaz:double>")
-    def _fwd(a: pa.Array, b: pa.Array, c: pa.Array,
-             d: pa.Array) -> pa.Array:
-        g = _geod_cache(ellps)
-        lo, la, baz = g.fwd(a.to_numpy(zero_copy_only=False),
-                            b.to_numpy(zero_copy_only=False),
-                            c.to_numpy(zero_copy_only=False),
-                            d.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(lo, dtype="float64")),
-             pa.array(np.asarray(la, dtype="float64")),
-             pa.array(np.asarray(baz, dtype="float64"))],
-            names=["lon", "lat", "backaz"])
-
-    return _fwd(lon, lat, az, dist)
+    """struct<lon,lat,backaz> — Karney direct as an Arrow UDF."""
+    return _numpy_udf(lambda *a: _geod(ellps).fwd(*a),
+                      "struct<lon:double,lat:double,backaz:double>")(
+        lon, lat, az, dist)
 
 
 def proj_factors(crs, lon: Column, lat: Column) -> Column:
-    """struct<h,k,areal> — Proj.get_factors (T8) as a pandas UDF:
+    """struct<h,k,areal> — Proj.get_factors (T8) as an Arrow UDF:
     meridional scale, parallel scale, areal scale per point (reference
     ``pyproj/proj.py:204-278``)."""
 
-    @arrow_udf("struct<h:double,k:double,areal:double>")
-    def _fac(lo: pa.Array, la: pa.Array) -> pa.Array:
+    def _fac(lo, la):
         from pyproj_spark.proj import Proj
-        f = Proj(crs).get_factors(lo.to_numpy(zero_copy_only=False),
-                                  la.to_numpy(zero_copy_only=False))
-        return pa.StructArray.from_arrays(
-            [pa.array(np.asarray(f.meridional_scale, dtype="float64")),
-             pa.array(np.asarray(f.parallel_scale, dtype="float64")),
-             pa.array(np.asarray(f.areal_scale, dtype="float64"))],
-            names=["h", "k", "areal"])
+        f = Proj(crs).get_factors(lo, la)
+        return f.meridional_scale, f.parallel_scale, f.areal_scale
 
-    return _fac(lon, lat)
-
-
-_GEODS: dict = {}
-
-
-def _geod_cache(ellps: str):
-    g = _GEODS.get(ellps)
-    if g is None:
-        from pyproj_spark.kernels.geod import Geod
-        g = Geod(ellps=ellps)
-        _GEODS[ellps] = g
-    return g
+    return _numpy_udf(_fac, "struct<h:double,k:double,areal:double>")(
+        lon, lat)
 
 
 def reverse_azimuth(az: Column) -> Column:

@@ -29,7 +29,6 @@ are driver literals (a route table would broadcast).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd  # noqa: F401 — kept for callers' type hints
 import pyarrow as pa
 import pyarrow.compute as pc
 

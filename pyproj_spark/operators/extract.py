@@ -16,16 +16,15 @@ cost in the reference docs/advanced_examples.rst:13-44).
 
 from __future__ import annotations
 
+import functools
 import re
-
-import numpy as np
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
-import pyarrow as pa  # module-level: arrow_udf resolves string hints here
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyproj_spark.functions.transform import transform_xy
+from pyproj_spark.crs.crs import CRS
+from pyproj_spark.functions.transform import _groups, _numpy_udf
+from pyproj_spark.plans.spec import TransformSpec, get_kernel
 
 ANCHOR_RE = r"@geo\((-?\d+\.\d+),(-?\d+\.\d+)(?:,(EPSG:\d+))?\)"
 _ANCHOR_RE_PY = re.compile(ANCHOR_RE)
@@ -63,7 +62,7 @@ def extract_anchors(pages: DataFrame, normalize_crs: bool = True
     )
     if not normalize_crs:
         return a
-    # Single-pass mixed-CRS normalization: ONE pandas UDF groups each
+    # Single-pass mixed-CRS normalization: ONE Arrow UDF groups each
     # Arrow batch by src_crs and runs the per-CRS kernel on each group
     # (kernels are planned once per worker, cached by spec). No driver
     # collect(), no per-CRS scan/union — the fact table is read exactly
@@ -86,81 +85,50 @@ def _epsg_code(src_crs) -> "F.Column":
     return F.split(src_crs, ":").getItem(1).cast("int")
 
 
+@functools.cache
+def _to_4326_kernel(code: int):
+    return get_kernel(TransformSpec(CRS.from_epsg(code).srs, "EPSG:4326",
+                                    always_xy=True))
+
+
+def _to_4326(xs, ys, codes):
+    """Mixed-CRS (x, y) -> EPSG:4326 (lon, lat): one kernel call per
+    distinct EPSG code in the batch."""
+    lon, lat = xs.copy(), ys.copy()
+    for code, ii in _groups(codes):
+        if code != 4326:
+            lon[ii], lat[ii], _ = _to_4326_kernel(int(code))(lon[ii],
+                                                             lat[ii])
+    return lon, lat
+
+
 def normalize_to_4326(x, y, src_crs):
     """struct<x,y> Arrow-UDF: transform mixed-CRS coordinate columns to
     EPSG:4326 lon/lat, batching per distinct src_crs inside each Arrow
     batch (the per-worker kernel cache makes replans free). The CRS
-    column crosses the boundary as its native-extracted int EPSG code.
-    r6: ``arrow_udf`` (pyarrow arrays in/out) skips the Arrow->pandas
-    Series materialization on both sides of the crossing — the numpy
-    kernel math is byte-identical (same float64 buffers)."""
-    from pyspark.sql.functions import arrow_udf
-
-    from pyproj_spark.crs.crs import CRS
-    from pyproj_spark.plans.spec import TransformSpec, get_kernel
-
-    @arrow_udf("struct<x:double,y:double>")
-    def _norm(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
-        xo = np.asarray(xs.to_numpy(zero_copy_only=False),
-                        dtype=np.float64).copy()
-        yo = np.asarray(ys.to_numpy(zero_copy_only=False),
-                        dtype=np.float64).copy()
-        cn = codes.to_numpy(zero_copy_only=False)
-        for code in np.unique(cn):
-            if code == 4326:
-                continue
-            ii = np.flatnonzero(cn == code)
-            spec = TransformSpec(CRS.from_epsg(int(code)).srs,
-                                 "EPSG:4326", always_xy=True)
-            k = get_kernel(spec)
-            xi, yi, _ = k(xo[ii], yo[ii])
-            xo[ii] = xi
-            yo[ii] = yi
-        return pa.StructArray.from_arrays(
-            [pa.array(xo), pa.array(yo)], names=["x", "y"])
-
-    return _norm(x, y, _epsg_code(src_crs))
+    column crosses the boundary as its native-extracted int EPSG code."""
+    return _numpy_udf(_to_4326, "struct<x:double,y:double>")(
+        x, y, _epsg_code(src_crs))
 
 
 def normalize_and_project(x, y, src_crs, target: str = "EPSG:3857"):
-    """struct<lon,lat,px,py> pandas-UDF: ONE Python crossing that both
+    """struct<lon,lat,px,py> Arrow-UDF: ONE Python crossing that both
     normalizes mixed-CRS anchors to EPSG:4326 AND projects them to the
     target CRS. The flagship pipeline uses this instead of two chained
     UDFs — halving Arrow traffic matters more than anything else in the
     hot path (each ArrowEvalPython node is a full serialize/deserialize
     of the anchor stream)."""
-    from pyspark.sql.functions import arrow_udf
+    to_target = TransformSpec("EPSG:4326", CRS.from_user_input(target).srs,
+                              always_xy=True)
 
-    from pyproj_spark.crs.crs import CRS
-    from pyproj_spark.plans.spec import TransformSpec, get_kernel
+    def _np2(xs, ys, codes):
+        lon, lat = _to_4326(xs, ys, codes)
+        px, py, _ = get_kernel(to_target)(lon, lat)
+        return lon, lat, px, py
 
-    tgt_srs = CRS.from_user_input(target).srs
-
-    # arrow_udf (Spark 4.1): pyarrow arrays in/out — no Arrow->pandas
-    # Series round trip; same numpy kernels on the same float64
-    # buffers, so the output bits are identical (oracle-gated).
-    @arrow_udf("struct<lon:double,lat:double,px:double,py:double>")
-    def _np2(xs: pa.Array, ys: pa.Array, codes: pa.Array) -> pa.Array:
-        lon = np.asarray(xs.to_numpy(zero_copy_only=False),
-                         dtype=np.float64).copy()
-        lat = np.asarray(ys.to_numpy(zero_copy_only=False),
-                         dtype=np.float64).copy()
-        cn = codes.to_numpy(zero_copy_only=False)
-        for code in np.unique(cn):
-            if code == 4326:
-                continue
-            ii = np.flatnonzero(cn == code)
-            spec = TransformSpec(CRS.from_epsg(int(code)).srs,
-                                 "EPSG:4326", always_xy=True)
-            k = get_kernel(spec)
-            lon[ii], lat[ii], _ = k(lon[ii], lat[ii])
-        kt = get_kernel(TransformSpec("EPSG:4326", tgt_srs, always_xy=True))
-        px, py, _ = kt(lon, lat)
-        return pa.StructArray.from_arrays(
-            [pa.array(lon), pa.array(lat), pa.array(px), pa.array(py)],
-            names=["lon", "lat", "px", "py"])
-
-    return _np2(x, y, _epsg_code(src_crs))
+    return _numpy_udf(
+        _np2, "struct<lon:double,lat:double,px:double,py:double>")(
+        x, y, _epsg_code(src_crs))
 
 
 def extract_anchors_py(text: str) -> list[tuple[str, float, float, str]]:

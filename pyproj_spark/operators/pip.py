@@ -8,7 +8,7 @@ The graft's flagship join (SURVEY.md §2.6): instead of a theta-join
      (zones are a dimension table);
   3. equi-join on cell = the only join, map-side via broadcast hash join
      (zero shuffle of the fact table);
-  4. exact even-odd crossing test as a vectorized pandas UDF, batched per
+  4. exact even-odd crossing test as a vectorized Arrow UDF, batched per
      zone inside each Arrow batch (ring geometry is identical across a
      zone's rows, so the inner loop is one numpy pass per distinct zone).
 
@@ -21,13 +21,13 @@ vertex longitudes into the point's local frame.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from pyproj_spark.functions import cells
+from pyproj_spark.functions.transform import _f64, _groups, _numpy_udf
 
 
 def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,
@@ -61,7 +61,18 @@ def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,
     return (hits.sum(axis=1) % 2).astype(bool)
 
 
-from pyspark.sql.types import BooleanType
+def _pip_mask(zone, lon, lat, ring_of):
+    """Even-odd test of each row against its zone's ring, one numpy
+    pass per distinct zone in the batch. Rows arrive join-ordered, so
+    they are grouped by zone_id (a geometry-derived key would collide
+    for zones sharing vertices); ``ring_of(zone_id, row)`` gives the
+    zone's ring as (lons, lats), or None, from any of its rows."""
+    out = np.zeros(len(zone), dtype=bool)
+    for zid, ii in _groups(zone):
+        r = ring_of(zid, ii[0])
+        if r is not None and len(r[0]):
+            out[ii] = point_in_ring_np(lon[ii], lat[ii], r[0], r[1])
+    return out
 
 
 def _make_pip_udf(rings_bc):
@@ -71,32 +82,15 @@ def _make_pip_udf(rings_bc):
     whole table per task). The ring geometry never crosses Arrow per row
     (it is identical across a zone's candidate rows; shipping it as a
     struct column multiplied the batch payload by the ring size)."""
-
-    @pandas_udf(BooleanType())
-    def _pip(zone_id: pd.Series, lon: pd.Series,
-             lat: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        lon_v = lon.to_numpy()
-        lat_v = lat.to_numpy()
-        out = np.zeros(len(lon_v), dtype=bool)
-        # rows arrive join-ordered: group by zone_id (one numpy pass per
-        # distinct zone inside the batch) — zone_id is the key; a
-        # geometry-derived key would collide for zones sharing vertices
-        for zid, idx in zone_id.groupby(zone_id).groups.items():
-            r = rings.get(zid)
-            if r is None or len(r[0]) == 0:
-                continue
-            ii = np.asarray(idx)
-            out[ii] = point_in_ring_np(lon_v[ii], lat_v[ii], r[0], r[1])
-        return pd.Series(out)
-
-    return _pip
+    return _numpy_udf(lambda zone, lon, lat: _pip_mask(
+        zone, lon, lat, lambda zid, _row: rings_bc.value.get(zid)),
+        "boolean")
 
 
 def _pip_join_struct(cand: DataFrame, lon_col: str,
                      lat_col: str) -> DataFrame:
     """Fallback for ring tables too big to broadcast: candidates carry
-    the ring as a struct column through the cell equi-join; a mapInPandas
+    the ring as a struct column through the cell equi-join; a mapInArrow
     pass parses each zone's ring ONCE per (batch, zone) and filters.
     One extra shuffle-side payload, zero driver-side collection."""
     import pyspark.sql.types as T
@@ -104,22 +98,19 @@ def _pip_join_struct(cand: DataFrame, lon_col: str,
         [f for f in cand.schema.fields if f.name != "ring"])
 
     def batches(it):
-        for pdf in it:
-            keep = np.zeros(len(pdf), dtype=bool)
-            pos = {ix: i for i, ix in enumerate(pdf.index)}
-            for _zid, idx in pdf.groupby("zone_id").groups.items():
-                ring = pdf["ring"].loc[idx[0]]
-                rl = np.array([p["lon"] for p in ring])
-                rb = np.array([p["lat"] for p in ring])
-                if len(rl) == 0:
-                    continue
-                ii = np.array([pos[ix] for ix in idx])
-                keep[ii] = point_in_ring_np(
-                    pdf[lon_col].to_numpy()[ii],
-                    pdf[lat_col].to_numpy()[ii], rl, rb)
-            yield pdf.loc[keep].drop(columns=["ring"])
+        for b in it:
+            rings = b.column("ring")
 
-    return cand.mapInPandas(batches, out_schema)
+            def ring_of(_zid, row):
+                pts = rings[int(row)].values
+                return _f64(pts.field("lon")), _f64(pts.field("lat"))
+
+            keep = _pip_mask(_f64(b.column("zone_id")),
+                             _f64(b.column(lon_col)),
+                             _f64(b.column(lat_col)), ring_of)
+            yield b.filter(pa.array(keep)).drop_columns(["ring"])
+
+    return cand.mapInArrow(batches, out_schema)
 
 
 def pip_join(anchors: DataFrame, zones: DataFrame,
@@ -134,7 +125,7 @@ def pip_join(anchors: DataFrame, zones: DataFrame,
     executor via sparkContext.broadcast. Above broadcast_max_vertices
     total ring vertices (~64 MB at 16 B/vertex) the join switches to the
     struct-column path: rings ride the cell equi-join and are parsed
-    once per (batch, zone) in a mapInPandas pass — slower per row but
+    once per (batch, zone) in a mapInArrow pass — slower per row but
     never materializes the zone table on the driver.
     Returns anchors columns + zone_id.
     """

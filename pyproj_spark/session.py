@@ -3,7 +3,7 @@
 The confs here are the ones that matter at 100 TB: AQE (runtime
 re-planning + skew-join splitting), a shuffle-partition count sized to
 the local core count (on a real cluster this is set per-job), and Arrow
-batching for the pandas-UDF kernels (the Spark analogue of pyproj's
+batching for the Arrow-UDF kernels (the Spark analogue of pyproj's
 64-point micro-batches — reference ``pyproj/transformer.py:1096-1099`` —
 but sized for Arrow transfer amortization, not C-call overhead).
 """
@@ -14,9 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: Arrow batch size for pandas-UDF kernels. pyproj uses 64-point batches
-#: because its per-call overhead is one C call; ours is a JVM->Python
-#: Arrow round trip whose per-batch overhead dominates at small sizes —
+#: the directory holding the ``pyproj_spark`` package: Python workers
+#: import it from here whatever their cwd
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
+#: Arrow batch size for the Arrow-UDF kernels. pyproj uses 64-point
+#: batches because its per-call overhead is one C call; ours is a
+#: JVM->Python Arrow round trip whose per-batch overhead dominates at
+#: small sizes —
 #: measured on the flagship pipeline (5M anchor rows): 10k-row batches
 #: 2.00 s, 65k 1.67 s, plateau beyond. Wide rows (binary payloads) are
 #: bounded by Spark 4's spark.sql.execution.arrow.maxBytesPerBatch
@@ -45,7 +51,9 @@ def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
     """Build (or reuse) a local SparkSession tuned for the engine.
 
     On a real cluster the same confs apply, minus ``master``; jobs are
-    submitted with ``spark-submit --py-files pyproj_spark.zip``.
+    submitted with ``spark-submit --py-files pyproj_spark.zip``. Python
+    workers get the package's parent directory prepended to their
+    ``PYTHONPATH``, so jobs run from any cwd.
     ``java_opts`` (driver JVM flags) only takes effect for the process's
     FIRST session — pass it before any other get_spark call.
     """
@@ -66,6 +74,8 @@ def get_spark(app_name: str = "pyproj_spark", cores: int | None = None,
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(
+            None, [_PACKAGE_PARENT, os.environ.get("PYTHONPATH")])))
     )
     if java_opts:
         builder = builder.config("spark.driver.extraJavaOptions",

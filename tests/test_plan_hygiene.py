@@ -621,3 +621,37 @@ def test_scatter_pair_family_equi_joins_only(spark):
         assert "BroadcastNestedLoopJoin" not in plan, q.__name__
         assert ("SortMergeJoin" in plan or "BroadcastHashJoin" in plan
                 or "ShuffledHashJoin" in plan), q.__name__
+
+
+def test_flagship_chain_single_arrow_crossing(spark):
+    # extract -> normalize+project is ONE Python boundary: a second
+    # ArrowEvalPython would re-serialize the whole anchor stream
+    from perfbench.workloads import flagship_df
+    from pyproj_spark.sources.pages import pages_df
+    plan = _plan(flagship_df(pages_df(spark, 20)))
+    assert plan.count("ArrowEvalPython") == 1
+
+
+def test_pip_join_crossing_shapes(spark):
+    # broadcast rings: the exact test is one scalar Arrow UDF; the
+    # ring-as-struct fallback is one mapInArrow pass, never pandas
+    from pyproj_spark.operators.pip import pip_join
+    from pyproj_spark.sources.zones import zones_df
+    pts = spark.createDataFrame([(1, 2.35, 48.86)], "id long, lon double, "
+                                "lat double")
+    zones = zones_df(spark, n_zones=20)
+    plan = _plan(pip_join(pts, zones))
+    assert plan.count("ArrowEvalPython") == 1
+    plan = _plan(pip_join(pts, zones, broadcast_max_vertices=1))
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_knn_exact_single_arrow_crossing(spark):
+    from pyproj_spark.operators.knn import knn_to_zones
+    from pyproj_spark.sources.zones import zones_df
+    pts = spark.createDataFrame([(1, 2.35, 48.86)], "id long, lon double, "
+                                "lat double")
+    plan = _plan(knn_to_zones(pts, zones_df(spark, n_zones=20),
+                              id_cols=("id",), exact=True))
+    assert plan.count("ArrowEvalPython") == 1

@@ -731,3 +731,195 @@ def test_polyline_encoder_google_vector():
     FROM d
     """
     assert con.execute(sql).fetchone()[0] == "_p~iF~ps|U_ulLnnqC_mqNvxq`@"
+
+
+# ------------------------------------------------------ kernel parity
+#
+# Every numpy-kernel column, bit for bit against its kernel run over
+# the whole column at once. Tiny Arrow batches (7 rows) split each
+# EPSG-code and zone group across batches and mix several in one
+# batch; one all-null x/y row must come back NaN (not null).
+
+_PARITY_PIPE = ("+proj=pipeline "
+                "+step +proj=unitconvert +xy_in=deg +xy_out=rad "
+                "+step +proj=molodensky +ellps=intl +dx=-87 +dy=-96 "
+                "+dz=-120 +da=-251.0 +df=-1.4192702e-05 "
+                "+step +proj=unitconvert +xy_in=rad +xy_out=deg")
+_PARITY_KEYED = {2100: "EPSG:2100", 32139: "EPSG:32139",
+                 3857: "EPSG:3857"}
+_PARITY_NULL_ID = 13
+
+
+def _parity_points() -> pd.DataFrame:
+    from pyproj_spark.plans.spec import TransformSpec, get_kernel
+    rng = np.random.default_rng(5)
+    n = 60
+    # blocks of 5 rows alternate Istanbul / Chicago (both hot zones)
+    near_chicago = (np.arange(n) // 5) % 2 == 1
+    lon = np.where(near_chicago, -87.630, 28.979) + rng.uniform(-.6, .6, n)
+    lat = np.where(near_chicago, 41.878, 41.008) + rng.uniform(-.6, .6, n)
+    code = np.where(near_chicago, [4326, 32139, 3857] * (n // 3),
+                    [4326, 2100, 3857] * (n // 3))
+    x, y = lon.copy(), lat.copy()
+    for c in (2100, 32139, 3857):
+        m = code == c
+        x[m], y[m], _ = get_kernel(TransformSpec(
+            "EPSG:4326", f"EPSG:{c}", always_xy=True))(lon[m], lat[m])
+    p = pd.DataFrame({
+        "id": np.arange(n), "lon": lon, "lat": lat, "x": x, "y": y,
+        "code": code.astype("int32"),
+        "src_crs": [f"EPSG:{c}" for c in code],
+        "h": rng.uniform(-50, 900, n), "az": rng.uniform(-180, 180, n),
+        "dist": rng.uniform(0, 5e6, n), "lon2": lon[::-1].copy(),
+        "lat2": lat[::-1].copy(), "t": rng.uniform(1995, 2025, n)})
+    p["ex"] = 4.0e6 + p["lon"] * 1e4
+    p["ey"] = 1.5e6 + p["lat"] * 1e4
+    p["ez"] = 4.5e6 + p["h"]
+    p.loc[_PARITY_NULL_ID, ["lon", "lat", "x", "y", "ex", "ey"]] = np.nan
+    p.loc[_PARITY_NULL_ID, "code"] = 2100
+    p.loc[_PARITY_NULL_ID, "src_crs"] = "EPSG:2100"
+    return p
+
+
+def _parity_df(spark, p: pd.DataFrame):
+    rows = [tuple(None if isinstance(v, float) and np.isnan(v) else v
+                  for v in r) for r in p.itertuples(index=False)]
+    types = {"id": "long", "code": "int", "src_crs": "string"}
+    ddl = ", ".join(f"{c} {types.get(c, 'double')}" for c in p.columns)
+    return spark.createDataFrame(rows, ddl)
+
+
+def _to4326(p: pd.DataFrame):
+    from pyproj_spark.crs.crs import CRS
+    from pyproj_spark.plans.spec import TransformSpec, get_kernel
+    lon, lat = p["x"].to_numpy().copy(), p["y"].to_numpy().copy()
+    code = p["code"].to_numpy()
+    for c in (2100, 32139, 3857):
+        m = code == c
+        lon[m], lat[m], _ = get_kernel(TransformSpec(
+            CRS.from_epsg(c).srs, "EPSG:4326", always_xy=True))(
+                lon[m], lat[m])
+    return lon, lat
+
+
+def _parity_case(name: str, p: pd.DataFrame):
+    """(column builder, expected per-field arrays) for one column."""
+    from pyproj_spark.crs.crs import CRS
+    from pyproj_spark.functions import transform as T
+    from pyproj_spark.kernels.geod import Geod
+    from pyproj_spark.kernels.itrf import ITRFTransformer
+    from pyproj_spark.operators.extract import (normalize_and_project,
+                                                normalize_to_4326)
+    from pyproj_spark.plans.pipeline import PipelineKernel
+    from pyproj_spark.plans.spec import TransformSpec, get_kernel
+    from pyproj_spark.proj import Proj
+
+    def kern(src, dst):
+        return get_kernel(TransformSpec(CRS.from_user_input(src).srs,
+                                        CRS.from_user_input(dst).srs,
+                                        always_xy=True))
+
+    c = {k: F.col(k) for k in p.columns}
+    a = {k: p[k].to_numpy() for k in p.columns}
+    if name == "transform_xy":
+        return (T.transform_xy("EPSG:4326", "EPSG:3857", c["lon"], c["lat"]),
+                kern("EPSG:4326", "EPSG:3857")(a["lon"], a["lat"])[:2])
+    if name == "transform_xy_op_id":
+        xo, yo, _, ops = kern("EPSG:4267", "EPSG:4269").call_with_ops(
+            a["lon"], a["lat"])
+        return (T.transform_xy("EPSG:4267", "EPSG:4269", c["lon"],
+                               c["lat"], with_op_id=True),
+                (xo, yo, ops.astype("int32")))
+    if name == "transform_xy_keyed":
+        xo, yo = np.full(len(p), np.nan), np.full(len(p), np.nan)
+        for k, dst in _PARITY_KEYED.items():
+            m = a["code"] == k
+            xo[m], yo[m], _ = kern("EPSG:4326", dst)(a["lon"][m],
+                                                     a["lat"][m])
+        return (T.transform_xy_keyed("EPSG:4326", _PARITY_KEYED, c["code"],
+                                     c["lon"], c["lat"]), (xo, yo))
+    if name == "transform_xyz":
+        return (T.transform_xyz("EPSG:4326", "EPSG:4978", c["lon"],
+                                c["lat"], c["h"]),
+                kern("EPSG:4326", "EPSG:4978")(a["lon"], a["lat"], a["h"]))
+    if name == "transform_pipeline":
+        return (T.transform_pipeline(_PARITY_PIPE, c["lon"], c["lat"],
+                                     c["h"]),
+                PipelineKernel(_PARITY_PIPE)(a["lon"], a["lat"], a["h"]))
+    if name == "transform_itrf":
+        return (T.transform_itrf("ITRF2014", "ITRF2000", c["ex"],
+                                 c["ey"], c["ez"], c["t"]),
+                ITRFTransformer("ITRF2014", "ITRF2000").transform(
+                    a["ex"], a["ey"], zz=a["ez"], tt=a["t"])[:3])
+    if name == "geod_inverse":
+        return (T.geod_inverse("WGS84", c["lon"], c["lat"], c["lon2"],
+                               c["lat2"]),
+                Geod(ellps="WGS84").inv(a["lon"], a["lat"], a["lon2"],
+                                        a["lat2"]))
+    if name == "geod_forward":
+        return (T.geod_forward("WGS84", c["lon"], c["lat"], c["az"],
+                               c["dist"]),
+                Geod(ellps="WGS84").fwd(a["lon"], a["lat"], a["az"],
+                                        a["dist"]))
+    if name == "proj_factors":
+        f = Proj("EPSG:3857").get_factors(a["lon"], a["lat"])
+        return (T.proj_factors("EPSG:3857", c["lon"], c["lat"]),
+                (f.meridional_scale, f.parallel_scale, f.areal_scale))
+    if name == "normalize_to_4326":
+        return (normalize_to_4326(c["x"], c["y"], c["src_crs"]),
+                _to4326(p))
+    assert name == "normalize_and_project"
+    lon, lat = _to4326(p)
+    px, py, _ = kern("EPSG:4326", "EPSG:3857")(lon, lat)
+    return (normalize_and_project(c["x"], c["y"], c["src_crs"]),
+            (lon, lat, px, py))
+
+
+@pytest.fixture
+def tiny_batches(spark):
+    from pyproj_spark.session import ARROW_BATCH_ROWS
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    yield
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
+                   str(ARROW_BATCH_ROWS))
+
+
+@pytest.mark.parametrize("name", [
+    "transform_xy", "transform_xy_op_id", "transform_xy_keyed",
+    "transform_xyz", "transform_pipeline", "transform_itrf",
+    "geod_inverse", "geod_forward", "proj_factors", "normalize_to_4326",
+    "normalize_and_project", "pip_join", "pip_join_struct"])
+def test_column_kernel_parity(spark, tiny_batches, name):
+    p = _parity_points()
+    df = _parity_df(spark, p).repartition(3, "id")
+    if name.startswith("pip_join"):
+        zrows = make_zone_rings(40)
+        bmv = 1 if name == "pip_join_struct" else 4_000_000
+        got = {tuple(r) for r in pip_join(
+            df, zones_df(spark, n_zones=40),
+            broadcast_max_vertices=bmv).select("id", "zone_id").collect()}
+        want = set()
+        for zid, _name, ring in zrows:
+            inside = point_in_ring_np(
+                p["lon"].to_numpy(), p["lat"].to_numpy(),
+                np.array([q[0] for q in ring]),
+                np.array([q[1] for q in ring]))
+            want |= {(int(i), zid) for i in np.flatnonzero(inside)}
+        assert len(want) > 10
+        assert got == want
+        return
+    col, want = _parity_case(name, p)
+    rows = sorted(df.select("id", col.alias("o")).collect())
+    assert [r["id"] for r in rows] == list(range(len(p)))
+    fields = rows[0]["o"].__fields__
+    assert len(fields) == len(want)
+    for f, w in zip(fields, want):
+        vals = [r["o"][f] for r in rows]
+        # a null input row comes back NaN, never null
+        assert all(v is not None for v in vals), (name, f)
+        np.testing.assert_array_equal(
+            np.asarray(vals), np.asarray(w), err_msg=f"{name}.{f}")
+    # the all-null x/y row: NaN out (proj_factors: its kernel's inf)
+    second = rows[_PARITY_NULL_ID]["o"][1]
+    assert np.isnan(second) or (name == "proj_factors"
+                                and np.isinf(second))
