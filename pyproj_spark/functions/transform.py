@@ -2,7 +2,7 @@
 
 One Arrow batch in -> one out, never per-row Python (the engine-wide
 rule from BASELINE.json input_hint). Every numpy-kernel column crosses
-into Python through the one adapter below, :func:`_numpy_udf`. The
+into Python through the one adapter, ``crossing._numpy_udf``. The
 TransformSpec is resolved on the driver (plan once — reference
 ``docs/advanced_examples.rst:269-291`` shows why) and captured in the
 UDF closure; each python worker materializes the numpy kernel once per
@@ -20,58 +20,12 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
 
+from pyproj_spark.crossing import _groups, _numpy_udf
 from pyproj_spark.crs.crs import CRS
 from pyproj_spark.plans.spec import TransformSpec, get_kernel
-
-#: numpy dtype for each Arrow field type the adapter packs
-_DTYPES = {"double": np.float64, "int": np.int32, "boolean": np.bool_}
-
-
-def _f64(arr: pa.Array) -> np.ndarray:
-    """Arrow column -> float64 numpy array (nulls become NaN)."""
-    return np.asarray(arr.to_numpy(zero_copy_only=False), dtype=np.float64)
-
-
-def _numpy_udf(fn, ddl: str):
-    """The one Python crossing for numpy kernels: an ``arrow_udf``
-    returning ``ddl`` — ``boolean`` or ``struct<name:double|int,...>`` —
-    that calls ``fn`` on float64 numpy arrays of its argument columns
-    and packs what it returns (one array, or one per struct field in
-    order) into that Arrow type."""
-    if ddl.startswith("struct<"):
-        fields = [f.split(":") for f in ddl[len("struct<"):-1].split(",")]
-
-        def pack(out):
-            return pa.StructArray.from_arrays(
-                [pa.array(np.asarray(o, dtype=_DTYPES[t]))
-                 for o, (_, t) in zip(out, fields, strict=True)],
-                names=[n for n, _ in fields])
-    else:
-        def pack(out):
-            return pa.array(np.asarray(out, dtype=_DTYPES[ddl]))
-
-    @arrow_udf(ddl)
-    def _udf(*cols: pa.Array) -> pa.Array:
-        return pack(fn(*map(_f64, cols)))
-
-    return _udf
-
-
-def _groups(keys: np.ndarray):
-    """Yield ``(key, row indices)`` per distinct key of a batch, from
-    one argsort (a NaN key is its own group). The indices of a key come
-    in no fixed order: callers run elementwise kernels on them."""
-    if len(keys) == 0:
-        return
-    order = np.argsort(keys)
-    k = keys[order]
-    for ii in np.split(order, np.flatnonzero(k[1:] != k[:-1]) + 1):
-        yield keys[ii[0]], ii
 
 
 def transform_xy(crs_from, crs_to, x: Column, y: Column,

@@ -8,7 +8,8 @@ surface real: audio sample extraction (PCM WAV), video frame sampling
 baseline-JPEG decoder). Matching fixture ENCODERS synthesize
 deterministic bitstreams for tests and oracle queries. Compressed
 audio (MP3/AAC) and inter-frame video codecs (H.264 …) genuinely need
-external libraries and stay stubbed in ``decode_features``.
+external libraries and are not decoded: the decoders reject them and
+the multimodal operators drop those rows.
 """
 
 from __future__ import annotations

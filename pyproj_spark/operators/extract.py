@@ -22,8 +22,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyproj_spark.crossing import _groups, _numpy_udf
 from pyproj_spark.crs.crs import CRS
-from pyproj_spark.functions.transform import _groups, _numpy_udf
 from pyproj_spark.plans.spec import TransformSpec, get_kernel
 
 ANCHOR_RE = r"@geo\((-?\d+\.\d+),(-?\d+\.\d+)(?:,(EPSG:\d+))?\)"

@@ -9,8 +9,9 @@ Distributed shape (what must survive 100 TB):
   * candidate costs: one scan cross-joined against the broadcast
     segment table (at corpus scale the segment set is cell-prefiltered
     first, the pip_join/knn pattern, so the fan-out stays bounded);
-  * DP: applyInPandas per trajectory — state is steps x states
-    integers, bounded by the trajectory length, never corpus-sized;
+  * DP: one array row per trajectory through an Arrow UDF — state is
+    steps x states integers, bounded by the trajectory length, never
+    corpus-sized;
   * all costs are EXACT int64 (d^2 rounded once to 1e-10-degree^2
     units), so a SQL engine replays the full DP bit-for-bit.
 
@@ -24,9 +25,10 @@ columns) and SQL (ORDER BY cost, seg LIMIT 1).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from pyproj_spark.crossing import _row_udf
 
 #: segment-switch penalty in the same 1e-10 deg^2 units as emissions
 LAMBDA = 2_000_000_000
@@ -57,15 +59,13 @@ def viterbi_match(pts: DataFrame, segs: DataFrame,
     Execution shape (r6): the emission table collapses to one array row
     per trajectory (sort_array(collect_list(struct(step, seg_id, em)))
     — a hash aggregate with map-side partial agg) and the whole Arrow
-    batch of trajectories runs the DP in one pandas-UDF call. The old
-    groupBy().applyInPandas shape paid a pandas pivot + per-group
+    batch of trajectories runs the DP in one Arrow-UDF call. The old
+    per-group grouped-map shape paid a pandas pivot + per-group
     Python call per trajectory (~2 ms each), which dominated when AQE
     coalesced the tiny shuffle to one task. Emission matrices are dense
     (emission_costs is a cross join), so the sorted flat array reshapes
     to the same steps x states matrix the pivot produced — identical
     int64 DP, identical first-argmin tie-breaks."""
-    from pyspark.sql.functions import pandas_udf
-
     em = emission_costs(pts, segs)
     arr = (em.groupBy("traj_id")
            .agg(F.array_sort(F.collect_list(F.struct(
@@ -77,32 +77,28 @@ def viterbi_match(pts: DataFrame, segs: DataFrame,
                    F.col("_a.g").alias("_segs"),
                    F.col("_a.e").alias("_ems")))
 
-    @pandas_udf("array<struct<step:long,seg_id:int>>")
-    def _dp(steps_s: pd.Series, segs_s: pd.Series,
-            ems_s: pd.Series) -> pd.Series:
-        out = []
-        for steps, seg_ids, ems in zip(steps_s, segs_s, ems_s):
-            steps = np.asarray(steps, np.int64)
-            seg_ids = np.asarray(seg_ids, np.int64)
-            ems = np.asarray(ems, np.int64)
-            n_seg = int(np.searchsorted(steps, steps[0], side="right"))
-            k_steps = len(steps) // n_seg
-            e = ems.reshape(k_steps, n_seg)      # rows: ascending step;
-            segs_sorted = seg_ids[:n_seg]        # cols: ascending seg
-            vs = [e[0].copy()]
-            for k in range(1, k_steps):
-                prev = vs[-1]
-                vs.append(e[k] + np.minimum(prev, prev.min() + lam))
-            path = np.empty(k_steps, dtype=np.int64)
-            path[-1] = int(np.argmin(vs[-1]))    # first min = low seg
-            for k in range(k_steps - 2, -1, -1):
-                cand = vs[k] + lam * (np.arange(n_seg) != path[k + 1])
-                path[k] = int(np.argmin(cand))
-            out.append([{"step": int(steps[i * n_seg]),
-                         "seg_id": int(segs_sorted[p])}
-                        for i, p in enumerate(path)])
-        return pd.Series(out)
+    def _path(steps, seg_ids, ems):
+        steps = np.asarray(steps, np.int64)
+        seg_ids = np.asarray(seg_ids, np.int64)
+        ems = np.asarray(ems, np.int64)
+        n_seg = int(np.searchsorted(steps, steps[0], side="right"))
+        k_steps = len(steps) // n_seg
+        e = ems.reshape(k_steps, n_seg)      # rows: ascending step;
+        segs_sorted = seg_ids[:n_seg]        # cols: ascending seg
+        vs = [e[0].copy()]
+        for k in range(1, k_steps):
+            prev = vs[-1]
+            vs.append(e[k] + np.minimum(prev, prev.min() + lam))
+        path = np.empty(k_steps, dtype=np.int64)
+        path[-1] = int(np.argmin(vs[-1]))    # first min = low seg
+        for k in range(k_steps - 2, -1, -1):
+            cand = vs[k] + lam * (np.arange(n_seg) != path[k + 1])
+            path[k] = int(np.argmin(cand))
+        return [{"step": int(steps[i * n_seg]),
+                 "seg_id": int(segs_sorted[p])}
+                for i, p in enumerate(path)]
 
+    _dp = _row_udf(_path, "array<struct<step:long,seg_id:int>>")
     return (arr.select("traj_id",
                        F.explode(_dp("_steps", "_segs", "_ems"))
                        .alias("_r"))

@@ -4,7 +4,7 @@
 The reference's ``Geod.line_length`` walks consecutive points in C
 (``pyproj/_geod.pyx:476-539``); distributed, the same dataflow is
 ``lead() over (partitionBy(line) orderBy(seq))`` -> per-segment Karney
-inverse (pandas UDF) -> ``groupBy(line).agg(sum)``. Catalyst handles
+inverse (Arrow UDF) -> ``groupBy(line).agg(sum)``. Catalyst handles
 partial aggregation; the only shuffle is the window's, reused by the
 final agg because the partition keys match.
 """
@@ -12,12 +12,13 @@ final agg because the partition keys match.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyproj_spark.functions.transform import geod_inverse, haversine_m
+from pyproj_spark.crossing import _f64, _row_udf, _schema, _table
+from pyproj_spark.functions.transform import (_geod, geod_inverse,
+                                              haversine_m)
 
 
 def segment_lengths(points: DataFrame, line_col: str = "line_id",
@@ -56,25 +57,19 @@ def polygon_areas(points: DataFrame, poly_col: str = "poly_id",
     polygon id and vertex order; each group runs the Green's-theorem +
     Gauss-Legendre kernel (kernels/area.py, golden-tested against the
     reference's values) once per polygon inside an Arrow batch via
-    applyInPandas. The cheap all-Catalyst spherical twin for in-plan
+    applyInArrow. The cheap all-Catalyst spherical twin for in-plan
     predicates is functions.transform.spherical_ring_area_m2."""
-    from pyproj_spark.kernels.geod import Geod
-
     out_schema = f"{poly_col} long, area_m2 double, perimeter_m double"
+    schema = _schema(out_schema)
 
-    def _area(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = _GEOD_CACHE.setdefault(ellps, Geod(ellps=ellps))
-        pdf = pdf.sort_values(seq_col)
-        area, perim = g.polygon_area_perimeter(
-            pdf[lon_col].to_numpy(), pdf[lat_col].to_numpy())
-        return pd.DataFrame({poly_col: [pdf[poly_col].iloc[0]],
-                             "area_m2": [float(area)],
-                             "perimeter_m": [float(perim)]})
+    def _area(key, t):
+        t = t.sort_by(seq_col)
+        area, perim = _geod(ellps).polygon_area_perimeter(
+            _f64(t[lon_col]), _f64(t[lat_col]))
+        return _table([[key[0].as_py()], [float(area)], [float(perim)]],
+                      schema)
 
-    return points.groupBy(poly_col).applyInPandas(_area, out_schema)
-
-
-_GEOD_CACHE: dict = {}
+    return points.groupBy(poly_col).applyInArrow(_area, out_schema)
 
 
 def convex_hulls(df: DataFrame, group_col: str, lon_col: str = "lon",
@@ -82,17 +77,17 @@ def convex_hulls(df: DataFrame, group_col: str, lon_col: str = "lon",
     """Per-group planar convex hull (Andrew's monotone chain, 1979 —
     public): the footprint-estimation op (zone coverage outline,
     cluster envelope). Sequential stack semantics route it to
-    applyInPandas per SURVEY §2.6's custom-operator rule — one
-    shuffle on the group key, numpy inside, hull size is O(sqrt of
+    applyInArrow per SURVEY §2.6's custom-operator rule — one
+    shuffle on the group key, Python inside, hull size is O(sqrt of
     points) in practice so the output stays tiny.
 
     Returns (group_col, hull) with hull = array<struct<lon, lat>> in
     counter-clockwise order starting from the lexicographically
     smallest vertex; degenerate groups (< 3 distinct points) return
     their distinct points sorted."""
-    def _hull(pdf: pd.DataFrame) -> pd.DataFrame:
-        pts = sorted(set(zip(pdf[lon_col], pdf[lat_col])))
-        g = pdf[group_col].iloc[0]
+    def _hull(key, t):
+        pts = sorted(set(zip(t[lon_col].to_pylist(),
+                             t[lat_col].to_pylist())))
         if len(pts) < 3:
             hull = pts
         else:
@@ -109,15 +104,15 @@ def convex_hulls(df: DataFrame, group_col: str, lon_col: str = "lon",
             lower = half(pts)
             upper = half(reversed(pts))
             hull = lower[:-1] + upper[:-1]
-        return pd.DataFrame(
-            {group_col: [g],
-             "hull": [[{"lon": float(x), "lat": float(y)}
-                       for x, y in hull]]})
+        return _table([[key[0].as_py()],
+                       [[{"lon": float(x), "lat": float(y)}
+                         for x, y in hull]]], schema)
 
     out_schema = (f"{group_col} long, "
                   "hull array<struct<lon: double, lat: double>>")
+    schema = _schema(out_schema)
     return (df.select(group_col, lon_col, lat_col)
-            .groupBy(group_col).applyInPandas(_hull, out_schema))
+            .groupBy(group_col).applyInArrow(_hull, out_schema))
 
 
 def simplify_lines(df: DataFrame, group_col: str = "user_id",
@@ -127,8 +122,8 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
     — the vector-tile reduction operator: per line, keep the minimal
     vertex subset whose chord deviation stays within eps. Lines are
     per-row-group small (a track, a ring) while the line COUNT is
-    corpus-scale, so the right Spark shape is applyInPandas per line
-    (one shuffle on the line key), the same contract as convex_hulls.
+    corpus-scale, so the lines are grouped by key (one shuffle on the
+    line key), the same contract as convex_hulls.
 
     Determinism: the split decision uses only +,-,*,/,sqrt (all
     IEEE-exact, no libm), with first-argmax tie-break — so an engine
@@ -136,13 +131,11 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
     what the unrolled-split DuckDB oracle checks. Output: the kept
     (group, seq) vertex rows.
     """
-    from pyspark.sql.functions import pandas_udf
-
     # r6 shape: one array row per line (hash agg with map-side partial
-    # aggregation) + ONE pandas-UDF call per Arrow batch of lines —
-    # the old per-group applyInPandas paid ~1 ms of pandas machinery
-    # per line, which dominated wall time on AQE-coalesced tiny
-    # stages. The split recursion below is byte-identical arithmetic.
+    # aggregation) + ONE Arrow-UDF call per Arrow batch of lines —
+    # a per-group grouped map paid ~1 ms of pandas machinery per line,
+    # which dominated wall time on AQE-coalesced tiny stages. The
+    # split recursion below is byte-identical arithmetic.
     def _dp_keep(xs: np.ndarray, ys: np.ndarray) -> np.ndarray:
         n = len(xs)
         keep = np.zeros(n, dtype=bool)
@@ -167,16 +160,12 @@ def simplify_lines(df: DataFrame, group_col: str = "user_id",
                 stack.append((k, i1))
         return keep
 
-    @pandas_udf("array<long>")
-    def _kept(seqs_s: pd.Series, xs_s: pd.Series,
-              ys_s: pd.Series) -> pd.Series:
-        out = []
-        for sq, xs, ys in zip(seqs_s, xs_s, ys_s):
-            xs = np.asarray(xs, np.float64)
-            ys = np.asarray(ys, np.float64)
-            keep = _dp_keep(xs, ys)
-            out.append(np.asarray(sq, np.int64)[keep])
-        return pd.Series(out)
+    def _kept_seqs(sq, xs, ys):
+        keep = _dp_keep(np.asarray(xs, np.float64),
+                        np.asarray(ys, np.float64))
+        return np.asarray(sq, np.int64)[keep]
+
+    _kept = _row_udf(_kept_seqs, "array<long>")
 
     pts = F.array_sort(F.collect_list(F.struct(
         F.col(seq_col).cast("long").alias("s"),

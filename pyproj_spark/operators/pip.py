@@ -26,8 +26,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyproj_spark.crossing import _f64, _groups, _numpy_udf
 from pyproj_spark.functions import cells
-from pyproj_spark.functions.transform import _f64, _groups, _numpy_udf
 
 
 def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,

@@ -3,18 +3,18 @@
 Vector side: per-tile summaries written ``partitionBy(z, tx, ty)`` so a
 tile server reads exactly one directory per tile (partition pruning =
 tile lookup). Raster side: per-tile aggregate grids materialized as
-fixed-size cell matrices via ``applyInPandas`` (one pandas group per
+fixed-size cell matrices via ``applyInArrow`` (one Arrow table per
 tile — the natural Spark mapping for "render this tile").
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyproj_spark.crossing import _f64, _schema, _table
 from pyproj_spark.functions.tiles import tile_xy_from_lonlat
 
 
@@ -55,7 +55,7 @@ def rasterize_tiles(points: DataFrame, zoom: int = 8, tile_px: int = 16,
                     ) -> DataFrame:
     """Per-tile density raster: counts on a tile_px x tile_px grid.
 
-    applyInPandas per (tile) group: the Arrow batch is exactly one
+    applyInArrow per (tile) group: the Arrow table is exactly one
     tile's points — the histogram is one numpy call. Output is sparse
     (only non-zero pixels), schema (z, tx, ty, px, py, n).
     """
@@ -64,31 +64,27 @@ def rasterize_tiles(points: DataFrame, zoom: int = 8, tile_px: int = 16,
     df = points.select(F.col(lon_col).alias("lon"),
                        F.col(lat_col).alias("lat")) \
         .withColumn("tx", tx).withColumn("ty", ty)
+    schema = _schema(RASTER_SCHEMA)
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
-        txv = int(pdf["tx"].iloc[0])
-        tyv = int(pdf["ty"].iloc[0])
+    def render(key, t):
+        txv, tyv = key[0].as_py(), key[1].as_py()
         # tile bounds in lon / mercator-y fraction space
         lon0 = txv / n * 360.0 - 180.0
         lon1 = (txv + 1) / n * 360.0 - 180.0
         merc = np.log(np.tan(np.pi / 4 + np.radians(
-            np.clip(pdf["lat"].to_numpy(), -85.05112878, 85.05112878)) / 2))
+            np.clip(_f64(t["lat"]), -85.05112878, 85.05112878)) / 2))
         yfrac = (1.0 - merc / np.pi) / 2.0 * n - tyv
-        xfrac = (pdf["lon"].to_numpy() - lon0) / (lon1 - lon0)
+        xfrac = (_f64(t["lon"]) - lon0) / (lon1 - lon0)
         px = np.clip((xfrac * tile_px).astype(np.int32), 0, tile_px - 1)
         py = np.clip((yfrac * tile_px).astype(np.int32), 0, tile_px - 1)
         hist = np.zeros((tile_px, tile_px), dtype=np.int64)
         np.add.at(hist, (py, px), 1)
         yy, xx = np.nonzero(hist)
-        return pd.DataFrame({
-            "z": np.full(len(xx), zoom, dtype=np.int32),
-            "tx": np.full(len(xx), txv, dtype=np.int64),
-            "ty": np.full(len(xx), tyv, dtype=np.int64),
-            "px": xx.astype(np.int32), "py": yy.astype(np.int32),
-            "n": hist[yy, xx],
-        })
+        return _table([np.full(len(xx), zoom), np.full(len(xx), txv),
+                       np.full(len(xx), tyv), xx, yy, hist[yy, xx]],
+                      schema)
 
-    return df.groupBy("tx", "ty").applyInPandas(render, RASTER_SCHEMA)
+    return df.groupBy("tx", "ty").applyInArrow(render, RASTER_SCHEMA)
 
 
 PNG_TILE_SCHEMA = "z int, tx long, ty long, n_points long, png binary"
@@ -99,23 +95,21 @@ def png_tiles(points: DataFrame, zoom: int = 8, tile_px: int = 16,
     """Materialize density tiles as REAL .png bytes (greyscale, pixel
     value = min(count, 255)) — the tile-server output format, built on
     rasterize_tiles' per-tile Arrow groups and the deterministic
-    encoder (operators/multimodal.py::encode_png). One applyInPandas
+    encoder (operators/multimodal.py::encode_png). One applyInArrow
     stage after the rasterize shuffle; bytes are reproducible (fixed
     filter + zlib level), so downstream dedup/caching by content hash
     works."""
     from pyproj_spark.operators.multimodal import encode_png
     sparse = rasterize_tiles(points, zoom, tile_px, lon_col, lat_col)
+    schema = _schema(PNG_TILE_SCHEMA)
 
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        txv = int(pdf["tx"].iloc[0])
-        tyv = int(pdf["ty"].iloc[0])
+    def assemble(key, t):
         img = np.zeros((tile_px, tile_px), dtype=np.int64)
-        img[pdf["py"].to_numpy(), pdf["px"].to_numpy()] = \
-            pdf["n"].to_numpy()
+        counts = t["n"].to_numpy()
+        img[t["py"].to_numpy(), t["px"].to_numpy()] = counts
         png = encode_png(np.minimum(img, 255).astype(np.uint8))
-        return pd.DataFrame({
-            "z": [zoom], "tx": [txv], "ty": [tyv],
-            "n_points": [int(pdf["n"].sum())], "png": [png]})
+        return _table([[zoom], [key[0].as_py()], [key[1].as_py()],
+                       [int(counts.sum())], [png]], schema)
 
-    return sparse.groupBy("tx", "ty").applyInPandas(
+    return sparse.groupBy("tx", "ty").applyInArrow(
         assemble, PNG_TILE_SCHEMA)

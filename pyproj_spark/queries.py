@@ -14,13 +14,13 @@ Conventions for hash-stable comparison:
 
 from __future__ import annotations
 
+import functools
 import math
-
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyproj_spark.crossing import _row_udf
 from pyproj_spark.functions import cells
 from pyproj_spark.functions.transform import haversine_m, transform_xy
 from pyproj_spark.operators.pip import pip_join
@@ -112,7 +112,7 @@ def _zones_df(spark):
 # ------------------------------------------------------------ geo queries
 
 def q_webmerc_transform(spark, sf_dir):
-    """T3: batch CRS transform 4326->3857 through the pandas-UDF kernel.
+    """T3: batch CRS transform 4326->3857 through the Arrow-UDF kernel.
     The oracle recomputes with DuckDB's ln/tan — independent check of the
     kernel math (SURVEY.md §2.1 T3)."""
     pts = _doc_points(spark, sf_dir)
@@ -767,9 +767,9 @@ def q_stateplane(spark, sf_dir):
     ``pyproj/transformer.py:184-230``). The oracle recomputes the full
     Snyder LCC-2SP closed form in DuckDB from the published EPSG
     sexagesimal parameters — an independent check of both the catalog
-    parameters and the projection kernel. Each zone's pandas-UDF kernel
+    parameters and the projection kernel. Each zone's Arrow-UDF kernel
     is planned once and broadcast; zone dispatch happens INSIDE one
-    pandas-UDF pass (transform_xy_keyed) so the source is scanned once
+    Arrow-UDF pass (transform_xy_keyed) so the source is scanned once
     — a per-zone branch-and-union would rescan it once per zone."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
@@ -870,7 +870,7 @@ def q_nad27_stateplane(spark, sf_dir):
     the oracle recomputes the full Snyder LCC-2SP closed form in
     DuckDB from the SP-235 sexagesimal constants, independently
     checking catalog parameters, clrk66 constants, ftUS conversion,
-    and the projection kernel. One scan, one pandas-UDF crossing
+    and the projection kernel. One scan, one Arrow-UDF crossing
     (transform_xy_keyed), zone dispatch inside the kernel."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
@@ -1051,34 +1051,23 @@ FROM ranked WHERE rank <= 3
 QUERIES["knn_ring"] = (q_knn_ring, SQL_KNN_RING)
 
 
+@functools.lru_cache(maxsize=256)
+def _wkt_code_lon0(wkt: str) -> tuple:
+    from pyproj_spark.crs.crs import CRS
+    c = CRS.from_wkt(wkt)
+    return c.to_epsg(), float(c.proj_params.get("lon_0", 0.0))
+
+
 def q_wkt_roundtrip(spark, sf_dir):
     """Distributed WKT round trip: every point's UTM CRS is serialized
     to WKT2 driver-side (120-row broadcast dimension), then PARSED BACK
-    inside a vectorized pandas UDF on the executors (CRS.from_wkt with a
-    per-batch cache — one parse per distinct WKT). The recovered EPSG
+    inside a per-row Arrow UDF on the executors (CRS.from_wkt with a
+    per-worker cache — one parse per distinct WKT). The recovered EPSG
     code and central meridian must equal the oracle's pure arithmetic —
     so WKT parsing itself is driver-gated every round."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
     from pyproj_spark.crs.crs import CRS
 
-    schema = StructType([StructField("code", LongType()),
-                         StructField("lon_0", DoubleType())])
-
-    @pandas_udf(schema)
-    def _parse_wkt(wkt: pd.Series) -> pd.DataFrame:
-        from functools import lru_cache
-
-        @lru_cache(maxsize=256)
-        def parse(w):
-            c = CRS.from_wkt(w)
-            return (c.to_epsg(), float(c.proj_params.get("lon_0", 0.0)))
-
-        return pd.DataFrame([parse(w) for w in wkt],
-                            columns=["code", "lon_0"])
-
+    _parse_wkt = _row_udf(_wkt_code_lon0, "struct<code:long,lon_0:double>")
     mapping = [(32600 + z, CRS.from_epsg(32600 + z).to_wkt())
                for z in range(1, 61)]
     mapping += [(32700 + z, CRS.from_epsg(32700 + z).to_wkt())
@@ -1188,7 +1177,7 @@ def q_vertical_shift(spark, sf_dir):
     841-985 z semantics): gravity-related heights H on a synthetic
     vertical datum become ellipsoidal heights h = H + N(lon, lat)
     through the registered geoid surface (kernels/grids.py::GeoidGrid,
-    PROJ's vgridshift), fused with the horizontal leg in ONE pandas-UDF
+    PROJ's vgridshift), fused with the horizontal leg in ONE Arrow-UDF
     crossing (transform_xyz on CompoundCRS(4326+vertical) -> EPSG:4979).
     The oracle recomputes the bilinear undulation from the geoid's
     closed-form node values — the same replay pattern as grid_shift."""
@@ -1442,7 +1431,7 @@ def q_geocent_transform(spark, sf_dir):
     """3D kernel path (T3 z-variant): geodetic lon/lat/h -> EPSG:4978
     geocentric XYZ through transform_xyz; the oracle recomputes the
     closed-form geodetic->geocentric conversion (N = a/sqrt(1-e2 sin2),
-    X = (N+h) cos cos, ...) so the 3D pandas-UDF crossing and the
+    X = (N+h) cos cos, ...) so the 3D Arrow-UDF crossing and the
     datum kernel are value-hash-gated."""
     from pyproj_spark.functions.transform import transform_xyz
     pts = _doc_points(spark, sf_dir).withColumn(
@@ -1554,7 +1543,7 @@ QUERIES["geod_sphere"] = (q_geod_sphere, SQL_GEOD_SPHERE)
 
 
 def q_factors(spark, sf_dir):
-    """T8 driver-gated: Proj.get_factors through the pandas-UDF path on
+    """T8 driver-gated: Proj.get_factors through the Arrow-UDF path on
     Web Mercator, whose factors have closed forms the oracle recomputes
     (k = h = sec phi, areal = sec^2 phi — spherical convention, PROJ
     does the same for webmerc). |lat| <= 60 keeps the finite-difference
@@ -1797,7 +1786,7 @@ def q_pipeline_e2e(spark, sf_dir):
     (gzip members on odd files) with a geo anchor embedded in each
     page's HTML; sources/warc.py parses the container bytes and
     extracts text; operators/extract.py pulls the anchors back out of
-    the extracted text (regex, byte-identity contract); the pandas-UDF
+    the extracted text (regex, byte-identity contract); the Arrow-UDF
     kernel transforms them to EPSG:3857; native tile math assigns
     slippy z=8 tiles; and per-tile counts aggregate. The oracle
     computes the same tiles arithmetically straight from the anchor
@@ -1807,35 +1796,19 @@ def q_pipeline_e2e(spark, sf_dir):
     from pyproj_spark.functions.tiles import tile_xy
     from pyproj_spark.functions.transform import transform_xy
     from pyproj_spark.operators.extract import extract_anchors
-    from pyproj_spark.sources.warc import build_warc, warc_pages
+    from pyproj_spark.queries_text import _warc_files
+    from pyproj_spark.sources.warc import warc_pages
 
     d = _doc_points(spark, sf_dir) \
         .join(_t(spark, sf_dir, "documents").select("doc_id", "text"),
               "doc_id")
 
-    def _build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        pages = []
-        for r in pdf.itertuples():
-            iso = pd.Timestamp("2024-01-01") \
-                + pd.Timedelta(seconds=int(r.doc_id))
-            html = (f"<html><body><p>{r.text}</p><p>@geo({r.lon!r},"
-                    f"{r.lat!r})</p></body></html>").encode()
-            pages.append((f"https://ex.org/{int(r.doc_id)}",
-                          iso.strftime("%Y-%m-%dT%H:%M:%SZ"), html))
-        wid = int(key[0])
-        return pd.DataFrame({"warc_id": [wid],
-                             "content": [build_warc(
-                                 pages, gzip_members=bool(wid % 2))]})
+    def _page(r):
+        return r["doc_id"], (f"<html><body><p>{r['text']}</p><p>@geo("
+                             f"{r['lon']!r},{r['lat']!r})</p></body>"
+                             f"</html>").encode()
 
-    # explicit repartition on the group key: AQE would coalesce the
-    # tiny groupBy shuffle to one partition and serialize the gzip
-    # WARC build + parse on a single core (guide §2.5)
-    d = (d.withColumn("warc_id", F.floor(F.col("doc_id") / 25))
-         .repartition(spark.sparkContext.defaultParallelism, "warc_id"))
-    warcs = (d.groupBy("warc_id")
-             .applyInPandas(_build, "warc_id long, content binary"))
-    pages = warc_pages(warcs).select("url", "text")
+    pages = warc_pages(_warc_files(d, 25, _page)).select("url", "text")
     anchors = extract_anchors(pages, normalize_crs=True)
     xy = transform_xy("EPSG:4326", "EPSG:3857",
                       F.col("lon"), F.col("lat"))
@@ -2080,7 +2053,7 @@ def q_raster_pyramid(spark, sf_dir):
     re-rasterization of the raw points. floor(X*K/2) ==
     floor(floor(X*K)/2), so block-merging IS the coarser
     rasterization, exactly. Output: sparse (tx, ty, px, py, n) at z=4.
-    tests/test_pipeline_tiling.py ties the applyInPandas per-tile
+    tests/test_pipeline_tiling.py ties the applyInArrow per-tile
     rasterizer to the same global-pixel math."""
     pts = _doc_points(spark, sf_dir)
     k = 512.0  # 2^5 tiles * 16 px
@@ -4187,7 +4160,7 @@ def q_s2_pip(spark, sf_dir):
     is refined. The oracle is the covering-blind SQL_PIP: hash
     equality proves the covering dropped no candidate AND that no
     certain range leaked an outside point. Contrast with pip_join
-    (geocell equality covering + pandas-UDF exact test)."""
+    (geocell equality covering + Arrow-UDF exact test)."""
     from pyproj_spark.functions import s2cell
     # the adaptive coverings are a pure function of the PIP_ZONES
     # module constants — ~1.3 s of driver-side numpy per call, so
@@ -6672,7 +6645,7 @@ def q_gauss_kruger(spark, sf_dir):
     coefficient doubles, hyperbolics spelled via exp/ln identities —
     an independent end-to-end check of catalog parameters, krass
     constants, and the transverse-Mercator kernel. One scan, zone
-    dispatch inside one pandas-UDF crossing (transform_xy_keyed)."""
+    dispatch inside one Arrow-UDF crossing (transform_xy_keyed)."""
     from pyproj_spark.functions.transform import transform_xy_keyed
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -6766,7 +6739,7 @@ def q_krovak_grid(spark, sf_dir):
     (EPSG method 9819, S-JTSK / Krovak East North = EPSG:5514; the
     kernel reproduces the EPSG guidance-note worked example to 2 cm —
     tests/test_projections_round5.py::TestKrovak). Deterministic
-    points over the CZ/SK window go through ONE pandas-UDF crossing
+    points over the CZ/SK window go through ONE Arrow-UDF crossing
     (Transformer.from_crs(4156, 5514), reference transformer.py:
     184-230); the oracle replays the full closed form — gaussian
     sphere, oblique rotation, conformal cone — in DuckDB from the
@@ -6850,7 +6823,7 @@ def q_world_proj(spark, sf_dir):
     Tripel (the reference reaches all three via +proj strings,
     pyproj/crs/crs.py:236-320). Deterministic world-spanning points
     (chosen off the equator/central-meridian special branches) go
-    through three Transformer.from_crs pipelines — one pandas-UDF
+    through three Transformer.from_crs pipelines — one Arrow-UDF
     crossing each — and the oracle replays every closed form in
     DuckDB: the exact rectifying-latitude meridian-arc series for
     Bonne (kernel-constant doubles, the gauss_kruger pattern), the
@@ -6994,7 +6967,7 @@ def q_hammer_aitoff(spark, sf_dir):
     """Companion world-projection gate: Hammer (equal-area 2:1
     ellipse) and Aitoff — the modified-azimuthal pair (equatorial
     LAEA / AEQD with halved longitudes and doubled x; Snyder pp.
-    160-163 and 230). Same shape as world_proj: one pandas-UDF
+    160-163 and 230). Same shape as world_proj: one Arrow-UDF
     crossing per projection, whole-meter BIGINT output, full closed
     forms replayed in DuckDB. wintri = mean(eqc, aitoff) is locked in
     tests/test_projections_world.py, so this gate plus world_proj
@@ -7142,7 +7115,7 @@ def q_rd_grid(spark, sf_dir):
     (Amersfoort / RD New, EPSG:28992; kernel reproduces the EPSG
     guidance-note worked example to 2 mm —
     tests/test_projections_round5.py::TestObliqueStereographic).
-    Deterministic points over the NL window go through ONE pandas-UDF
+    Deterministic points over the NL window go through ONE Arrow-UDF
     crossing (Transformer.from_crs(4289, 28992), reference
     transformer.py:184-230); the oracle replays the conformal-sphere
     double projection in DuckDB from the kernel's plan-time constant
@@ -7430,7 +7403,7 @@ def q_hmm_match(spark, sf_dir):
     12-segment road table — min sum(d2) + LAMBDA per segment switch —
     for 8-point trajectories (traj = doc_id/8). Candidate costs are
     one broadcast-crossed scan; the DP runs per-trajectory in
-    applyInPandas with EXACT int64 costs (`operators/hmm.py`), so the
+    an Arrow UDF with EXACT int64 costs (`operators/hmm.py`), so the
     oracle replays the full forward recursion AND the backward
     argmin path reconstruction in unrolled SQL, bit for bit. The
     path-coherent upgrade of snap_roads: a noisy point near a wrong
@@ -10861,8 +10834,6 @@ def q_quadkey_compact(spark, sf_dir):
     collapsed children — no geometry, no floats anywhere. This is
     the op that turns a 10^9-tile occupancy list into the compact
     region index a tile server actually loads."""
-    from pyspark.sql.functions import pandas_udf
-
     from pyproj_spark.functions.tiles import quadkey, tile_xy_from_lonlat
     pts = _doc_points(spark, sf_dir)
     tx, ty = tile_xy_from_lonlat(F.col("lon"), F.col("lat"), 8)
@@ -10883,23 +10854,20 @@ def q_quadkey_compact(spark, sf_dir):
     # present; re-attempted collapses of leftover lengths are no-ops
     # because rounds only remove length-L keys and add length-(L-1)
     # keys, never new length-L siblings.
-    @pandas_udf("array<string>")
-    def _compact(groups: pd.Series) -> pd.Series:
-        out = []
-        for arr in groups:
-            keys = set(arr)
-            for lv in (8, 7, 6):
-                for p in {k[:-1] for k in keys if len(k) == lv}:
-                    ch = {p + d for d in "0123"}
-                    if ch <= keys:
-                        keys -= ch
-                        keys.add(p)
-            out.append(sorted(keys))
-        return pd.Series(out)
+    def _compact(arr):
+        keys = set(arr)
+        for lv in (8, 7, 6):
+            for p in {k[:-1] for k in keys if len(k) == lv}:
+                ch = {p + d for d in "0123"}
+                if ch <= keys:
+                    keys -= ch
+                    keys.add(p)
+        return sorted(keys)
 
     comp = (cur.groupBy(F.substring("qk", 1, 5).alias("p5"))
             .agg(F.collect_set("qk").alias("ks"))
-            .select(F.explode(_compact("ks")).alias("qk")))
+            .select(F.explode(_row_udf(_compact, "array<string>")("ks"))
+                    .alias("qk")))
     return comp.select("qk", F.length("qk").alias("level")) \
         .orderBy("qk")
 

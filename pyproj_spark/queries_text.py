@@ -9,11 +9,12 @@ Cross-engine determinism notes:
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints
+import datetime as dt
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pyproj_spark.crossing import _row_map, _schema, _table
 from pyproj_spark.operators import dedup, similarity, textstats
 
 
@@ -463,46 +464,89 @@ SELECT id_a, rank, id_b, sim FROM ranked WHERE rank <= 3
 """
 
 
+def _blobs(spark, sf_dir, payload_of, spread: bool = True):
+    """(url, payload) per document in one row-map stage — the fixture
+    synthesizer of the multimodal queries: url is the doc_id as text,
+    payload is ``payload_of(doc_id)``. ``spread`` fans the small
+    documents scan out over every core first."""
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("url"), "doc_id")
+    if spread:
+        docs = _spread(docs)
+    return _row_map(docs, lambda url, d: [(url, payload_of(d))],
+                    "url string, payload binary")
+
+
+def _rgb(d: int, w: int, h: int):
+    """The fixtures' deterministic (h, w, 3) gradient image of doc d;
+    the oracles recompute its pixels from the same formulas."""
+    import numpy as np
+    x, y = np.meshgrid(np.arange(w), np.arange(h))
+    return np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
+                     (x + y) % 256], -1).astype(np.uint8)
+
+
+def _warc_files(docs, per_file: int, page_of):
+    """WARC/1.0 archives of ``docs`` rows, ``per_file`` consecutive
+    doc_ids each, built in one applyInArrow stage: ``page_of(row)``
+    gives a page's (seconds after 2024-01-01, html bytes), its url is
+    https://ex.org/<doc_id>, pages are in doc_id order, and odd files
+    use the Common-Crawl gzip-member-per-record layout.
+    -> (warc_id long, content binary)."""
+    from pyproj_spark.sources.warc import build_warc
+    ddl = "warc_id long, content binary"
+    schema = _schema(ddl)
+    t0 = dt.datetime(2024, 1, 1)
+
+    def _build(key, t):
+        pages = []
+        for r in t.sort_by("doc_id").to_pylist():
+            secs, html = page_of(r)
+            iso = t0 + dt.timedelta(seconds=secs)
+            pages.append((f"https://ex.org/{r['doc_id']}",
+                          iso.strftime("%Y-%m-%dT%H:%M:%SZ"), html))
+        wid = key[0].as_py()
+        return _table([[wid], [build_warc(pages,
+                                          gzip_members=bool(wid % 2))]],
+                      schema)
+
+    # explicit repartition on the group key: AQE would coalesce the
+    # tiny groupBy shuffle to one partition and serialize the WARC
+    # build + parse chain on a single core (guide §2.5 — explicit
+    # user repartitions keep their partition count under AQE)
+    n_par = docs.sparkSession.sparkContext.defaultParallelism
+    return (docs.withColumn("warc_id", F.floor(F.col("doc_id") / per_file))
+            .repartition(n_par, "warc_id")
+            .groupBy("warc_id").applyInArrow(_build, ddl))
+
+
 def q_image_meta(spark, sf_dir):
     """Multimodal image metadata, oracle-checked end to end: each doc
-    gets a REAL PNG header constructed from its id (mapInPandas), and
+    gets a REAL PNG header constructed from its id (a row map), and
     image_meta parses format/width/height back from the raw bytes —
     the oracle recomputes the expected dimensions arithmetically, so
     the construct->parse round trip through genuine container bytes is
     driver-gated."""
     import struct
-    from collections.abc import Iterator
 
     from pyproj_spark.operators.multimodal import image_meta
 
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
+    def _header(d: int) -> bytes:
+        if d % 4 == 0:
+            from pyproj_spark.kernels.jpeg import _exif_app1
+            # real JPEG header bytes: SOI + EXIF APP1 carrying
+            # orientation + SOF0 with the dims (header-parse +
+            # exif-walk both gated; alternating byte order)
+            app1 = _exif_app1(d % 8 + 1, "<" if d % 8 < 4 else ">")
+            sof = (b"\xff\xc0" + struct.pack(
+                ">HBHHB", 11, 8, d % 768 + 1, d % 1024 + 1, 1)
+                + bytes([1, 0x11, 0]))
+            return b"\xff\xd8" + app1 + sof
+        return (b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13) + b"IHDR"
+                + struct.pack(">II", d % 1024 + 1, d % 768 + 1)
+                + b"\x08\x02\x00\x00\x00")
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyproj_spark.kernels.jpeg import _exif_app1
-        for pdf in batches:
-            payload = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 4 == 0:
-                    # real JPEG header bytes: SOI + EXIF APP1 carrying
-                    # orientation + SOF0 with the dims (header-parse +
-                    # exif-walk both gated; alternating byte order)
-                    app1 = _exif_app1(d % 8 + 1,
-                                      "<" if d % 8 < 4 else ">")
-                    sof = (b"\xff\xc0" + struct.pack(
-                        ">HBHHB", 11, 8, d % 768 + 1, d % 1024 + 1, 1)
-                        + bytes([1, 0x11, 0]))
-                    payload.append(b"\xff\xd8" + app1 + sof)
-                else:
-                    payload.append(
-                        b"\x89PNG\r\n\x1a\n" + struct.pack(">I", 13)
-                        + b"IHDR"
-                        + struct.pack(">II", d % 1024 + 1, d % 768 + 1)
-                        + b"\x08\x02\x00\x00\x00")
-            yield pd.DataFrame({"url": pdf["url"], "payload": payload})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _header, spread=False)
     meta = image_meta(blobs, "payload")
     return meta.select(F.col("url").cast("long").alias("doc_id"),
                        "format", "width", "height", "n_bytes",
@@ -526,46 +570,14 @@ def q_png_decode(spark, sf_dir):
     """REAL pixel-level multimodal decode, oracle-checked end to end:
     each doc gets a complete valid RGB PNG (deterministic gradient
     pixels, zlib-compressed IDAT, CRC-correct chunks) synthesized in a
-    mapInPandas stage; png_stats then INFLATES AND UNFILTERS the actual
+    row-map stage; png_stats then INFLATES AND UNFILTERS the actual
     byte stream (operators/multimodal.py decode_png) and reports
     dimensions + mean pixel value, which the DuckDB oracle recomputes
-    arithmetically from the same gradient formula. This replaces the
-    former rows-only decode stub — only JPEG/audio/video decode remains
-    stubbed (codec libraries absent from the container)."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
+    arithmetically from the same gradient formula."""
+    from pyproj_spark.operators.multimodal import encode_png, png_stats
 
-    from pyproj_spark.operators.multimodal import png_stats
-
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _png(d: int) -> bytes:
-        w, h = d % 16 + 1, d % 12 + 1
-        rows = bytearray()
-        for y in range(h):
-            rows.append(0)  # filter: None
-            for x in range(w):
-                rows += bytes(((x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                               (x + y) % 256))
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_png(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, lambda d: encode_png(
+        _rgb(d, d % 16 + 1, d % 12 + 1)))
     return png_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -599,47 +611,34 @@ def q_jpeg_decode(spark, sf_dir):
     """REAL baseline-JPEG decode, oracle-checked end to end: each doc
     gets a complete valid grayscale JFIF JPEG (per-8x8-block constant
     values from a deterministic formula, all-ones quantization so the
-    DC path is exact) synthesized in a mapInPandas stage via the
+    DC path is exact) synthesized in a row-map stage via the
     kernels/jpeg.py ENCODER; jpeg_stats then runs the full DECODER —
     marker parse, Huffman entropy decode, dequantize, IDCT — and the
     DuckDB oracle recomputes mean luma arithmetically from the same
     block formula. Constant blocks make the lossy DCT path bit-exact
     (only the DC coefficient is nonzero and quant=1 keeps it integer),
     so this is a value-hash gate over a genuinely decoded bitstream."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
+    # fixture-encode memoization (per-task dict): the block grid
+    # depends on d only through (d%3, d%2, d%256), so there are <= 768
+    # distinct images; the gated DECODE still runs once per row
+    cache: dict = {}
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _jpeg(d: int) -> bytes:
         from pyproj_spark.kernels.jpeg import encode_jpeg
-        # fixture-encode memoization (executor-side dict): the block
-        # grid depends on d only through (d%3, d%2, d%256), so there
-        # are <= 768 distinct images; the gated DECODE still runs once
-        # per row
-        cache: dict = {}
+        key = (d % 3 + 1, d % 2 + 1, d % 256)
+        if key not in cache:
+            bw, bh, dmod = key
+            bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
+            vals = (bx * 29 + by * 31 + dmod * 17) % 256
+            img = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
+            cache[key] = encode_jpeg(img)
+        return cache[key]
 
-        def _jpeg(d: int) -> bytes:
-            key = (d % 3 + 1, d % 2 + 1, d % 256)
-            if key not in cache:
-                bw, bh, dmod = key
-                bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-                vals = (bx * 29 + by * 31 + dmod * 17) % 256
-                img = np.repeat(np.repeat(vals, 8, 0), 8, 1) \
-                    .astype(np.uint8)
-                cache[key] = encode_jpeg(img)
-            return cache[key]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_jpeg(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _jpeg)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -673,14 +672,9 @@ def q_wav_features(spark, sf_dir):
     wav_features then parses the RIFF container and decodes the raw
     PCM, and the DuckDB oracle recomputes RMS/peak/duration
     arithmetically from the same sample formula."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import wav_features
-
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
 
     def _wav(d: int) -> bytes:
         from pyproj_spark.kernels.riff import encode_wav
@@ -688,13 +682,7 @@ def q_wav_features(spark, sf_dir):
         s = ((np.arange(n) * 37 + d * 11) % 200) - 100
         return encode_wav(s, rate=8000, bits=16)
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _wav, spread=False)
     return wav_features(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "sample_rate", "n_samples", "n_channels",
@@ -730,40 +718,28 @@ def q_frame_sample(spark, sf_dir):
     frame, and Huffman+IDCT-decodes each kept frame. The DuckDB oracle
     recomputes the sampled frame grid and per-frame mean arithmetically
     from the same formula."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import video_frame_sample
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
+    # fixture-encode memoization (per-task dict): only 256 distinct
+    # constant frames exist; the gated DECODE still runs per sampled
+    # frame
+    cache: dict = {}
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _frame(v: int) -> bytes:
         from pyproj_spark.kernels.jpeg import encode_jpeg
+        if v not in cache:
+            cache[v] = encode_jpeg(np.full((16, 16), v, dtype=np.uint8))
+        return cache[v]
+
+    def _avi(d: int) -> bytes:
         from pyproj_spark.kernels.riff import encode_avi_mjpg
-        # fixture-encode memoization (executor-side dict): only 256
-        # distinct constant frames exist; the gated DECODE still runs
-        # per sampled frame
-        cache: dict = {}
+        frames = [_frame((f * 53 + d * 17) % 256)
+                  for f in range(d % 5 + 2)]
+        return encode_avi_mjpg(frames, fps=10.0)
 
-        def _frame(v: int) -> bytes:
-            if v not in cache:
-                cache[v] = encode_jpeg(
-                    np.full((16, 16), v, dtype=np.uint8))
-            return cache[v]
-
-        def _avi(d: int) -> bytes:
-            frames = [_frame((f * 53 + d * 17) % 256)
-                      for f in range(d % 5 + 2)]
-            return encode_avi_mjpg(frames, fps=10.0)
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_avi(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _avi)
     return video_frame_sample(blobs, "payload", every_k=2).select(
         F.col("url").cast("long").alias("doc_id"),
         "frame_idx", "width", "height", "n_channels", "mean_luma")
@@ -795,56 +771,22 @@ def q_image_resize(spark, sf_dir):
     the DuckDB oracle recomputes the sampled pixel grid arithmetically
     — gating the normalize-to-fixed-shape step a training pipeline
     runs before tensorization."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
-
     import numpy as np
 
-    from pyproj_spark.operators.multimodal import image_resize
+    from pyproj_spark.operators.multimodal import encode_png, image_resize
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    def _rgb(d: int, w: int, h: int) -> "np.ndarray":
-        x, y = np.meshgrid(np.arange(w), np.arange(h))
-        return np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                         (x + y) % 256], -1).astype(np.uint8)
-
-    def _png(d: int, w: int, h: int) -> bytes:
-        px = _rgb(d, w, h)
-        rows = bytearray()
-        for yy in range(h):
-            rows.append(0)
-            rows += px[yy].tobytes()
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _image(d: int) -> bytes:
         from pyproj_spark.kernels.riff import encode_bmp, encode_gif
-        for pdf in batches:
-            payload = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                w, h = d % 16 + 1, d % 12 + 1
-                if d % 3 == 0:
-                    payload.append(_png(d, w, h))
-                elif d % 3 == 1:
-                    payload.append(encode_bmp(_rgb(d, w, h)))
-                else:  # grayscale GIF: all channels = (x*7 + d) % 256
-                    x, _y = np.meshgrid(np.arange(w), np.arange(h))
-                    payload.append(encode_gif(
-                        ((x * 7 + d) % 256).astype(np.uint8)))
-            yield pd.DataFrame({"url": pdf["url"], "payload": payload})
+        w, h = d % 16 + 1, d % 12 + 1
+        if d % 3 == 0:
+            return encode_png(_rgb(d, w, h))
+        if d % 3 == 1:
+            return encode_bmp(_rgb(d, w, h))
+        # grayscale GIF: all channels = (x*7 + d) % 256
+        x, _y = np.meshgrid(np.arange(w), np.arange(h))
+        return encode_gif(((x * 7 + d) % 256).astype(np.uint8))
 
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _image)
     return image_resize(blobs, "payload", out_h=4, out_w=4,
                         method="nearest").select(
         F.col("url").cast("long").alias("doc_id"),
@@ -1246,37 +1188,24 @@ def q_jpeg_progressive(spark, sf_dir):
     decoder must walk all six scans (restart intervals included) to
     reconstruct the image; DuckDB recomputes the expected mean luma
     arithmetically from the same deterministic block formula."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import jpeg_stats
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
+    cache: dict = {}
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _jpeg(d: int) -> bytes:
         from pyproj_spark.kernels.jpeg import encode_jpeg_progressive
-        cache: dict = {}
+        key = (d % 2 + 1, d % 3 + 1, d % 251)
+        if key not in cache:
+            bw, bh, dmod = key
+            bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
+            vals = (bx * 37 + by * 41 + dmod * 13) % 256
+            img = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
+            cache[key] = encode_jpeg_progressive(img, restart_interval=2)
+        return cache[key]
 
-        def _jpeg(d: int) -> bytes:
-            key = (d % 2 + 1, d % 3 + 1, d % 251)
-            if key not in cache:
-                bw, bh, dmod = key
-                bx, by = np.meshgrid(np.arange(bw), np.arange(bh))
-                vals = (bx * 37 + by * 41 + dmod * 13) % 256
-                img = np.repeat(np.repeat(vals, 8, 0), 8, 1) \
-                    .astype(np.uint8)
-                cache[key] = encode_jpeg_progressive(
-                    img, restart_interval=2)
-            return cache[key]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_jpeg(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _jpeg)
     return jpeg_stats(blobs, "payload").select(
         F.col("url").cast("long").alias("doc_id"),
         "width", "height", "n_channels", "mean_luma")
@@ -1310,7 +1239,7 @@ def q_warc_ingest(spark, sf_dir):
     """WARC ingestion, oracle-checked end to end: documents are
     serialized into multi-record WARC/1.0 files (20 pages per file,
     warcinfo + request + response records; odd files use the
-    Common-Crawl gzip-member-per-record layout) in an applyInPandas
+    Common-Crawl gzip-member-per-record layout) in an applyInArrow
     build stage, then sources/warc.py parses the raw bytes back —
     Content-Length framing, type filtering, gzip inflate, HTTP header
     split, tag-stripping text extraction, lang attribute — and the
@@ -1318,38 +1247,17 @@ def q_warc_ingest(spark, sf_dir):
     from the same deterministic page construction. Round-tripping the
     corpus through real container bytes gates the byte-identity
     contract of the input_hint table shape."""
-    from pyproj_spark.sources.warc import build_warc, warc_pages
+    from pyproj_spark.sources.warc import warc_pages
 
     docs = _docs(spark, sf_dir).select("doc_id", "text", "lang")
 
-    def _build(key, pdf):
-        pdf = pdf.sort_values("doc_id")
-        pages = []
-        for d, text, lang in zip(pdf["doc_id"], pdf["text"],
-                                 pdf["lang"]):
-            iso = pd.Timestamp("2024-01-01") \
-                + pd.Timedelta(seconds=60 * int(d))
-            html = (f'<html lang="{lang}"><head><script>var x=1;'
-                    f'</script></head><body><p>{text}</p></body>'
-                    f'</html>').encode()
-            pages.append((f"https://ex.org/{int(d)}",
-                          iso.strftime("%Y-%m-%dT%H:%M:%SZ"), html))
-        wid = int(key[0])
-        return pd.DataFrame({"warc_id": [wid],
-                             "content": [build_warc(
-                                 pages, gzip_members=bool(wid % 2))]})
+    def _page(r):
+        return 60 * r["doc_id"], (
+            f'<html lang="{r["lang"]}"><head><script>var x=1;'
+            f'</script></head><body><p>{r["text"]}</p></body>'
+            f'</html>').encode()
 
-    # explicit repartition on the group key: AQE would coalesce the
-    # tiny groupBy shuffle to one partition and serialize the WARC
-    # build + parse chain on a single core (guide §2.5 — explicit
-    # user repartitions keep their partition count under AQE)
-    n_par = spark.sparkContext.defaultParallelism
-    docs = (docs.withColumn("warc_id",
-                            F.floor(F.col("doc_id") / 20))
-            .repartition(n_par, "warc_id"))
-    warcs = (docs.groupBy("warc_id")
-             .applyInPandas(_build, "warc_id long, content binary"))
-    pages = warc_pages(warcs)
+    pages = warc_pages(_warc_files(docs, 20, _page))
     return pages.select(
         F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
         .alias("doc_id"),
@@ -3217,7 +3125,7 @@ def q_text_normalize(spark, sf_dir):
     deterministic 'dirty' tail — a decomposed e+COMBINING-ACUTE, a
     zero-width space, a BEL control, CJK — built with IDENTICAL
     chr()-arithmetic in both engines; Spark normalizes via the
-    unicodedata pandas UDF, DuckDB via its own ICU-side
+    unicodedata Arrow UDF, DuckDB via its own ICU-side
     nfc_normalize + RE2 strip. Two INDEPENDENT Unicode
     implementations must produce byte-identical text (md5-gated) —
     the strongest kind of oracle row in the suite."""
@@ -3415,36 +3323,23 @@ def q_tone_detect(spark, sf_dir):
     recomputes the same Goertzel-style sums arithmetically from the
     sample formula. The detected frequency must match exactly and the
     dominant bin's energy share to 1e-6."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import audio_tone_detect
 
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
     freqs = (500, 1000, 2000, 3000)
+    cache: dict = {}
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _wav(d: int) -> bytes:
         from pyproj_spark.kernels.riff import encode_wav
-        cache: dict = {}
+        f = freqs[d % 4]
+        if f not in cache:
+            n = np.arange(256)
+            s = np.floor(20000.0 * np.sin(2.0 * np.pi * f * n / 8000.0))
+            cache[f] = encode_wav(s.astype(np.int64), rate=8000, bits=16)
+        return cache[f]
 
-        def _wav(d: int) -> bytes:
-            f = freqs[d % 4]
-            if f not in cache:
-                n = np.arange(256)
-                s = np.floor(20000.0
-                             * np.sin(2.0 * np.pi * f * n / 8000.0))
-                cache[f] = encode_wav(s.astype(np.int64), rate=8000,
-                                      bits=16)
-            return cache[f]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _wav)
     return audio_tone_detect(blobs).select(
         F.col("url").cast("long").alias("doc_id"),
         "detected_hz", "energy_share")
@@ -4959,44 +4854,9 @@ def q_image_dhash(spark, sf_dir):
     64 gradient bits; per-hash duplicate counts close the dedup loop.
     The oracle recomputes luma/sampling/bits arithmetically from the
     pixel formulas — hash equality gates the whole decode+hash chain."""
-    import struct
-    import zlib
-    from collections.abc import Iterator
+    from pyproj_spark.operators.multimodal import encode_png, image_dhash
 
-    import numpy as np
-
-    from pyproj_spark.operators.multimodal import image_dhash
-
-    docs = _spread(_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id"))
-
-    W, H = 18, 12
-
-    def _png(d: int) -> bytes:
-        x, y = np.meshgrid(np.arange(W), np.arange(H))
-        px = np.stack([(x * 7 + d) % 256, (y * 13 + d * 3) % 256,
-                       (x + y) % 256], -1).astype(np.uint8)
-        rows = bytearray()
-        for yy in range(H):
-            rows.append(0)
-            rows += px[yy].tobytes()
-
-        def chunk(t: bytes, data: bytes) -> bytes:
-            return (struct.pack(">I", len(data)) + t + data
-                    + struct.pack(">I", zlib.crc32(t + data) & 0xFFFFFFFF))
-
-        ihdr = struct.pack(">IIBBBBB", W, H, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(rows)))
-                + chunk(b"IEND", b""))
-
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_png(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, lambda d: encode_png(_rgb(d, 18, 12)))
     hashed = image_dhash(blobs).withColumn("doc_id",
                                            F.col("url").cast("long"))
     from pyspark.sql import Window as W_
@@ -5047,14 +4907,9 @@ def q_audio_fp(spark, sf_dir):
     path, framed at 16 samples, exact integer energies, one bit per
     energy rise. The oracle recomputes frames/energies/bits from the
     sample formula — the decode+hash chain gates end to end."""
-    from collections.abc import Iterator
-
     import numpy as np
 
     from pyproj_spark.operators.multimodal import audio_fingerprint
-
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("url"), "doc_id")
 
     def _wav(d: int) -> bytes:
         from pyproj_spark.kernels.riff import encode_wav
@@ -5062,13 +4917,7 @@ def q_audio_fp(spark, sf_dir):
         s = ((np.arange(n) * 53 + d * 29) % 256) - 128
         return encode_wav(s, rate=8000, bits=16)
 
-    def _blob(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "payload": [_wav(int(d)) for d in pdf["doc_id"]]})
-
-    blobs = docs.mapInPandas(_blob, "url string, payload binary")
+    blobs = _blobs(spark, sf_dir, _wav, spread=False)
     return audio_fingerprint(blobs).select(
         F.col("url").cast("long").alias("doc_id"), "n_frames", "fp")
 

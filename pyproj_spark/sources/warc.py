@@ -8,7 +8,7 @@ is NEVER scanned for delimiters, so HTML containing ``\\r\\n\\r\\n``
 Common-Crawl convention of one gzip member per record are supported
 (multi-member inflate via zlib, no temp files).
 
-The Spark surface is :func:`warc_pages` — a ``mapInPandas`` stage, one
+The Spark surface is :func:`warc_pages` — a ``mapInArrow`` stage, one
 Arrow batch of WARC payloads in, page rows out. At corpus scale the
 payloads arrive from a binary source (``spark.read.format
 ("binaryFile")`` or an Iceberg binary column); each ~1 GB WARC file is
@@ -29,9 +29,9 @@ import re
 import zlib
 from html import unescape
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
+
+from pyproj_spark.crossing import _row_map
 
 #: the pages-table schema produced by warc_pages
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
@@ -275,7 +275,8 @@ def parse_warc_permissive(payload: bytes) -> tuple[list[dict], int]:
 def warc_pages(warcs: DataFrame, payload_col: str = "content",
                on_error: str = "fail") -> DataFrame:
     """WARC payloads -> pages rows (input_hint schema + http_status /
-    content_type). One mapInPandas stage; no shuffle.
+    content_type). One mapInArrow stage; no shuffle. NULL content
+    parses like an empty archive: no rows.
 
     ``on_error="fail"`` (default) raises on any malformed input;
     ``"skip"`` salvages intact records and counts the rest — at crawl
@@ -285,29 +286,23 @@ def warc_pages(warcs: DataFrame, payload_col: str = "content",
     without a second pass."""
     if on_error not in ("fail", "skip"):
         raise ValueError(f"on_error must be fail|skip: {on_error}")
-    cols = ["url", "warc_ts", "html", "text", "lang", "http_status",
-            "content_type", "n_bad"]
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for payload in pdf[payload_col]:
-                if on_error == "fail":
-                    recs, nbad = parse_warc(bytes(payload)), 0
-                else:
-                    recs, nbad = parse_warc_permissive(bytes(payload))
-                for r in recs:
-                    html = decode_html(r["html"], r["content_type"])
-                    rows.append((r["url"], r["warc_ts"], r["html"],
-                                 html_to_text(html), html_lang(html),
-                                 r["http_status"], r["content_type"],
-                                 nbad))
-                if not recs and nbad:
-                    # fully-corrupt archive: without a sentinel its
-                    # bad-record count would vanish with its rows and
-                    # the "alert without a second pass" contract breaks
-                    rows.append((None, None, None, None, None,
-                                 None, None, nbad))
-            yield pd.DataFrame(rows, columns=cols)
+    def _parse(payload):
+        payload = payload or b""
+        if on_error == "fail":
+            recs, nbad = parse_warc(payload), 0
+        else:
+            recs, nbad = parse_warc_permissive(payload)
+        for r in recs:
+            html = decode_html(r["html"], r["content_type"])
+            yield (r["url"], r["warc_ts"], r["html"], html_to_text(html),
+                   html_lang(html), r["http_status"], r["content_type"],
+                   nbad)
+        if not recs and nbad:
+            # fully-corrupt archive: without a sentinel its bad-record
+            # count would vanish with its rows and the "alert without a
+            # second pass" contract breaks
+            yield (None, None, None, None, None, None, None, nbad)
 
-    return warcs.mapInPandas(_parse, PAGES_SCHEMA + ", n_bad int")
+    return _row_map(warcs.select(payload_col), _parse,
+                    PAGES_SCHEMA + ", n_bad int")

@@ -114,7 +114,7 @@ def test_spark_skip_mode_fully_corrupt_archive(spark):
 
 
 def test_streaming_ingestion(spark, tmp_path):
-    """warc_pages composes with readStream: the same mapInPandas plan
+    """warc_pages composes with readStream: the same mapInArrow plan
     runs incrementally over arriving archive files."""
     import os
     d = str(tmp_path / "stream_in")
