@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 entry(spark): flagship query — deterministic geo points derived from the
-sf0.001 documents table are CRS-transformed to EPSG:3857 through the
-vectorized pandas-UDF kernel, geocell-encoded + slippy-tiled natively,
-and aggregated per tile (the "transformed-and-tiled pages/sec" unit of
-BASELINE.json).
+sf0.001 documents table are CRS-transformed to EPSG:3857 by the numpy
+kernel in one Arrow UDF (``arrow_udf``), geocell-encoded + slippy-tiled
+natively, and aggregated per tile (the "transformed-and-tiled pages/sec"
+unit of BASELINE.json).
 
 queries()/oracle_sql(): the full operator surface from SURVEY.md §2 —
 see pyproj_spark/queries.py (geo + relational) and

@@ -15,22 +15,22 @@ FileStatusCache makes: a path's files do not change underneath a
 running session. Test fixtures are immutable, and code that rewrites
 a path mid-session should call ``spark.read.parquet`` directly.
 
-Keyed weakly by session so stopped sessions release their entries.
+The memo is a dict stored on the session object itself, so it goes
+when the session goes. (A module-level map weakly keyed by session
+never evicts: each cached DataFrame refers back to its session, so the
+values keep their own keys alive. On the session, that reference is a
+cycle the garbage collector reclaims.)
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
-    weakref.WeakKeyDictionary()
-
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    per_session = _CACHE.setdefault(spark, {})
+    per_session = vars(spark).setdefault("_parquet_cache", {})
     key = os.path.abspath(path)
     df = per_session.get(key)
     if df is None:

@@ -1,32 +1,41 @@
-"""Point-in-polygon join — cell-prefiltered equi-join + exact test.
+"""Point in polygon: the even-odd containment decision and its join.
 
-The graft's flagship join (SURVEY.md §2.6): instead of a theta-join
-(impossible at 10^12 rows), PIP becomes
+This module owns the even-odd (crossing-number) test. It has one form
+per evaluation site:
+
+* :func:`point_in_ring_np` — numpy, wrap-aware; the exact refine of
+  :func:`pip_join` and the brute-force oracle of the tests
+  (FIXTURES.md §9);
+* :func:`inside_ring` — the same formula unrolled into native Catalyst
+  expressions, for rings fixed when the plan is built (the geofence
+  queries, the S2 join's boundary refine, the streaming geofence).
+
+Both count edge (x1, y1)-(x2, y2) when (y1 > lat) != (y2 > lat) and
+lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1), so points on an edge
+resolve by the same half-open rule, and the oracle SQL replays the
+formula term for term.
+
+:func:`pip_join` is the graft's flagship join (SURVEY.md §2.6): instead
+of a theta-join (impossible at 10^12 rows), PIP becomes
 
   1. anchors gain a geocell id (pure Catalyst bit math, no shuffle);
-  2. zones explode their covering cells -> (cell, zone) rows, BROADCAST
-     (zones are a dimension table);
+  2. zones explode their covering cells -> (cell, zone_id) rows,
+     BROADCAST: the zones table is a broadcast dimension table;
   3. equi-join on cell = the only join, map-side via broadcast hash join
      (zero shuffle of the fact table);
-  4. exact even-odd crossing test as a vectorized Arrow UDF, batched per
-     zone inside each Arrow batch (ring geometry is identical across a
-     zone's rows, so the inner loop is one numpy pass per distinct zone).
-
-Exact-match contract: the even-odd test below is the same algorithm as
-the brute-force oracle in tests (FIXTURES.md §9) — join output rows must
-match exactly. Antimeridian-crossing rings are handled by wrapping
-vertex longitudes into the point's local frame.
+  4. the exact test as one Arrow UDF, batched per zone inside each
+     Arrow batch (ring geometry is identical across a zone's rows, so
+     the inner loop is one numpy pass per distinct zone).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pyproj_spark.crossing import _f64, _groups, _numpy_udf
+from pyproj_spark.crossing import _groups, _numpy_udf
 from pyproj_spark.functions import cells
 
 
@@ -61,15 +70,33 @@ def point_in_ring_np(lon: np.ndarray, lat: np.ndarray,
     return (hits.sum(axis=1) % 2).astype(bool)
 
 
-def _pip_mask(zone, lon, lat, ring_of):
-    """Even-odd test of each row against its zone's ring, one numpy
-    pass per distinct zone in the batch. Rows arrive join-ordered, so
-    they are grouped by zone_id (a geometry-derived key would collide
-    for zones sharing vertices); ``ring_of(zone_id, row)`` gives the
-    zone's ring as (lons, lats), or None, from any of its rows."""
+def inside_ring(lon: Column, lat: Column, ring) -> Column:
+    """Even-odd test of ``(lon, lat)`` against the fixed ``ring``
+    (``[(lon, lat), ...]``) as unrolled native expressions: an int
+    column, 1 inside and 0 outside. No longitude wrap: for rings away
+    from the antimeridian it agrees with :func:`point_in_ring_np`."""
+    k = len(ring)
+    tot = F.lit(0)
+    for i in range(k):
+        x1, y1 = ring[i]
+        x2, y2 = ring[(i + 1) % k]
+        cond = (((F.lit(float(y1)) > lat) != (F.lit(float(y2)) > lat))
+                & (lon < F.lit(float(x1))
+                   + (lat - F.lit(float(y1)))
+                   * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1))))
+        tot = tot + F.when(cond, 1).otherwise(0)
+    return (tot % 2 == 1).cast("int")
+
+
+def _pip_mask(zone, lon, lat, rings):
+    """Even-odd test of each row against its zone's ring from the
+    ``{zone_id: (lons, lats)}`` dict, one numpy pass per distinct zone
+    in the batch. Rows arrive join-ordered, so they are grouped by
+    zone_id (a geometry-derived key would collide for zones sharing
+    vertices)."""
     out = np.zeros(len(zone), dtype=bool)
     for zid, ii in _groups(zone):
-        r = ring_of(zid, ii[0])
+        r = rings.get(zid)
         if r is not None and len(r[0]):
             out[ii] = point_in_ring_np(lon[ii], lat[ii], r[0], r[1])
     return out
@@ -83,82 +110,33 @@ def _make_pip_udf(rings_bc):
     (it is identical across a zone's candidate rows; shipping it as a
     struct column multiplied the batch payload by the ring size)."""
     return _numpy_udf(lambda zone, lon, lat: _pip_mask(
-        zone, lon, lat, lambda zid, _row: rings_bc.value.get(zid)),
-        "boolean")
-
-
-def _pip_join_struct(cand: DataFrame, lon_col: str,
-                     lat_col: str) -> DataFrame:
-    """Fallback for ring tables too big to broadcast: candidates carry
-    the ring as a struct column through the cell equi-join; a mapInArrow
-    pass parses each zone's ring ONCE per (batch, zone) and filters.
-    One extra shuffle-side payload, zero driver-side collection."""
-    import pyspark.sql.types as T
-    out_schema = T.StructType(
-        [f for f in cand.schema.fields if f.name != "ring"])
-
-    def batches(it):
-        for b in it:
-            rings = b.column("ring")
-
-            def ring_of(_zid, row):
-                pts = rings[int(row)].values
-                return _f64(pts.field("lon")), _f64(pts.field("lat"))
-
-            keep = _pip_mask(_f64(b.column("zone_id")),
-                             _f64(b.column(lon_col)),
-                             _f64(b.column(lat_col)), ring_of)
-            yield b.filter(pa.array(keep)).drop_columns(["ring"])
-
-    return cand.mapInArrow(batches, out_schema)
+        zone, lon, lat, rings_bc.value), "boolean")
 
 
 def pip_join(anchors: DataFrame, zones: DataFrame,
-             res: int = cells.DEFAULT_RES,
-             lon_col: str = "lon", lat_col: str = "lat",
-             broadcast_max_vertices: int = 4_000_000) -> DataFrame:
+             lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
     """anchors ⋈ zones where the point lies inside the zone ring.
 
-    anchors: any DF with lon/lat columns. zones: zones_df schema
-    (zone_id, name, ring, cells) — normally a broadcastable DIMENSION
-    table: rings are collected once on the driver and shipped per
-    executor via sparkContext.broadcast. Above broadcast_max_vertices
-    total ring vertices (~64 MB at 16 B/vertex) the join switches to the
-    struct-column path: rings ride the cell equi-join and are parsed
-    once per (batch, zone) in a mapInArrow pass — slower per row but
-    never materializes the zone table on the driver.
-    Returns anchors columns + zone_id.
+    anchors: any DataFrame with lon/lat columns. zones: a broadcast
+    dimension table with the ``sources.zones.ZONE_SCHEMA`` columns
+    (zone_id, name, ring, cells), its ``cells`` covered at
+    ``cells.DEFAULT_RES``, the resolution anchors are encoded at. The
+    rings are collected on the driver once per zones frame (one Spark
+    job) and shipped once per executor via sparkContext.broadcast; the
+    broadcast is remembered on the frame, so a zones table reused
+    across queries is collected once. Returns anchors columns +
+    zone_id.
     """
-    a = anchors.withColumn(
-        "cell", cells.cell_of(F.col(lon_col), F.col(lat_col), res))
-    # The size probe + ring collect + broadcast are ~3 driver round
-    # trips per call; a zones DIMENSION table is typically reused across
-    # many queries in a session, so the results are memoized on the
-    # DataFrame object itself (plan-side metadata, recomputed whenever
-    # the caller rebuilds the zones frame — never keyed on fact data).
-    cached = getattr(zones, "_pip_rings_cache", None)
-    if cached is not None:
-        n_vertices, rings_bc = cached
-    else:
-        n_vertices = zones.select(
-            F.sum(F.size("ring")).alias("n")).first()["n"] or 0
-        rings_bc = None
-    if n_vertices > broadcast_max_vertices:
-        zc = zones.select("zone_id", "ring",
-                          F.explode("cells").alias("cell"))
-        return _pip_join_struct(a.join(zc, "cell"), lon_col,
-                                lat_col).drop("cell")
+    rings_bc = getattr(zones, "_pip_rings_bc", None)
     if rings_bc is None:
         rings = {
             r["zone_id"]: (np.array([p["lon"] for p in r["ring"]]),
                            np.array([p["lat"] for p in r["ring"]]))
             for r in zones.select("zone_id", "ring").collect()}
-        sc = anchors.sparkSession.sparkContext
-        rings_bc = sc.broadcast(rings)
-        try:
-            zones._pip_rings_cache = (n_vertices, rings_bc)
-        except AttributeError:  # pragma: no cover - exotic DF proxies
-            pass
+        rings_bc = anchors.sparkSession.sparkContext.broadcast(rings)
+        zones._pip_rings_bc = rings_bc
+    a = anchors.withColumn("cell", cells.cell_of(
+        F.col(lon_col), F.col(lat_col), cells.DEFAULT_RES))
     zc = zones.select("zone_id", F.explode("cells").alias("cell"))
     cand = a.join(F.broadcast(zc), "cell")
     hit = cand.filter(_make_pip_udf(rings_bc)(

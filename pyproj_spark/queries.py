@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyproj_spark.crossing import _row_udf
 from pyproj_spark.functions import cells
 from pyproj_spark.functions.transform import haversine_m, transform_xy
-from pyproj_spark.operators.pip import pip_join
+from pyproj_spark.operators.pip import inside_ring, pip_join
 from pyproj_spark.operators.skew import spread_small_scan as _spread
 
 # ---------------------------------------------------------------- helpers
@@ -77,35 +77,22 @@ def _zone_edges_sql() -> str:
 
 _ZONES_DF_CACHE: dict = {}
 
-#: memo for driver-side pure functions of module constants (zone
-#: coverings etc.) — plan-side metadata, never derived from fact data
-_DRIVER_MEMO: dict = {}
-
 
 def _zones_df(spark):
     """The 5-zone dimension table. Memoized per SparkSession: every
     zone-joining query used to pay a fresh createDataFrame (py4j
-    serialization) plus pip_join's size-probe/collect round trips;
-    the table is a pure function of the PIP_ZONES module constants,
-    so one DataFrame per session serves them all (and pip_join's
-    on-DataFrame ring cache then hits across queries too)."""
+    serialization) plus pip_join's ring collect; the table is a pure
+    function of the PIP_ZONES module constants, so one DataFrame per
+    session serves them all (and pip_join's ring broadcast, kept on
+    the DataFrame, is then reused across queries too)."""
+    from pyproj_spark.sources.zones import zones_table
     key = spark.sparkContext.applicationId
-    hit = _ZONES_DF_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from pyproj_spark.sources.zones import ZONE_SCHEMA
-    import numpy as np
-    rows = []
-    for zid, ring in PIP_ZONES.items():
-        lons = np.array([p[0] for p in ring])
-        lats = np.array([p[1] for p in ring])
-        cov = cells.covering_np(lons, lats, cells.DEFAULT_RES).tolist()
-        rows.append((zid, f"z{zid}",
-                     [{"lon": float(a), "lat": float(b)} for a, b in ring],
-                     cov))
-    df = spark.createDataFrame(rows, ZONE_SCHEMA)
-    _ZONES_DF_CACHE.clear()          # one live session at a time
-    _ZONES_DF_CACHE[key] = df
+    df = _ZONES_DF_CACHE.get(key)
+    if df is None:
+        df = zones_table(spark, [(zid, f"z{zid}", ring)
+                                 for zid, ring in PIP_ZONES.items()])
+        _ZONES_DF_CACHE.clear()          # one live session at a time
+        _ZONES_DF_CACHE[key] = df
     return df
 
 
@@ -4146,6 +4133,19 @@ def _s2_bbox_sql():
 QUERIES["s2_bbox"] = (q_s2_bbox, _s2_bbox_sql())
 
 
+@functools.cache
+def _s2pip_covering():
+    """Adaptive level-8 S2 coverings of PIP_ZONES as (zone_id, cell id,
+    certain) rows, and the sorted cell levels they use. A pure function
+    of module constants (~1.3 s of driver-side numpy), so computed once
+    per process; never derived from fact data."""
+    from pyproj_spark.functions import s2cell
+    zr = [(zid, int(cid), int(certain))
+          for zid, ring in PIP_ZONES.items()
+          for cid, certain in s2cell.covering_polygon_adaptive(ring, 8)]
+    return zr, sorted({cid >> 58 for _, cid, _ in zr})
+
+
 def q_s2_pip(spark, sf_dir):
     """PIP join on the S2 index, end to end UDF-free: per-zone polygon
     coverings (driver-side, sound-superset by rect-vs-ring pruning)
@@ -4153,8 +4153,8 @@ def q_s2_pip(spark, sf_dir):
     point's level-8 id probes the literal range table with one
     filter+explode (no join, no shuffle before the final project); the
     exact even-odd crossing test runs as unrolled native expressions
-    (the same formula SQL_PIP uses, so candidate refinement is
-    bit-identical). The coverings are ADAPTIVE mixed-level (real-S2
+    (operators/pip.py::inside_ring, the formula SQL_PIP uses, so
+    candidate refinement is bit-identical). The coverings are ADAPTIVE mixed-level (real-S2
     shape): interior cells stay coarse and carry certain=1 — their
     points are accepted with NO exact test; only the boundary sliver
     is refined. The oracle is the covering-blind SQL_PIP: hash
@@ -4162,18 +4162,7 @@ def q_s2_pip(spark, sf_dir):
     certain range leaked an outside point. Contrast with pip_join
     (geocell equality covering + Arrow-UDF exact test)."""
     from pyproj_spark.functions import s2cell
-    # the adaptive coverings are a pure function of the PIP_ZONES
-    # module constants — ~1.3 s of driver-side numpy per call, so
-    # memoize (never keyed on fact data; recomputed per process)
-    if "s2pip_cov" not in _DRIVER_MEMO:
-        zr = []
-        levels = set()
-        for zid, ring in PIP_ZONES.items():
-            for cid, certain in s2cell.covering_polygon_adaptive(ring, 8):
-                zr.append((zid, int(cid), int(certain)))
-                levels.add(cid >> 58)
-        _DRIVER_MEMO["s2pip_cov"] = (zr, levels)
-    zr, levels = _DRIVER_MEMO["s2pip_cov"]
+    zr, levels = _s2pip_covering()
     pts = _doc_points(spark, sf_dir)
     cell = s2cell.cell_of(F.col("lon"), F.col("lat"), 8)
     # containment as an ANCESTOR EQUI-JOIN: the mixed-level covering
@@ -4193,29 +4182,15 @@ def q_s2_pip(spark, sf_dir):
             zr, "zone_id int, anc long, certain int")
     rdf = F.broadcast(_ZONES_DF_CACHE[rkey])
     anc = F.explode(F.array(*[
-        s2cell.parent(F.col("cell"), lv) for lv in sorted(levels)]))
+        s2cell.parent(F.col("cell"), lv) for lv in levels]))
     cands = (pts.withColumn("cell", cell)
              .withColumn("anc", anc)
              .join(rdf, "anc"))
-    lon, lat = F.col("lon"), F.col("lat")
-    crossings = F.lit(None).cast("int")
+    inside = F.lit(None).cast("int")
     for zid, ring in PIP_ZONES.items():
-        k = len(ring)
-        tot = F.lit(0)
-        for i in range(k):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % k]
-            cond = (((F.lit(float(y1)) > lat)
-                     != (F.lit(float(y2)) > lat))
-                    & (lon < F.lit(float(x1))
-                       + (lat - F.lit(float(y1)))
-                       * F.lit(float(x2 - x1))
-                       / F.lit(float(y2 - y1))))
-            tot = tot + F.when(cond, 1).otherwise(0)
-        crossings = F.when(F.col("zone_id") == zid,
-                           tot).otherwise(crossings)
-    return (cands.filter((F.col("certain") == 1)
-                         | (crossings % 2 == 1))
+        inside = F.when(F.col("zone_id") == zid, inside_ring(
+            F.col("lon"), F.col("lat"), ring)).otherwise(inside)
+    return (cands.filter((F.col("certain") == 1) | (inside == 1))
             .select("doc_id", "zone_id"))
 
 
@@ -4459,6 +4434,26 @@ UNION
 QUERIES["simplify"] = (q_simplify, _simplify_sql())
 
 
+def _mann_kendall_s(ns):
+    """Mann-Kendall S of the array column ``ns``: the sum of
+    sign(ns[j] - ns[i]) over index pairs i < j, as a long. An array of
+    fewer than two values has no pairs and gives 0 — guarded here,
+    because sequence(0, size - 2) counts DOWN to [0, -1] for a
+    one-element array and element_at would then index out of range."""
+    sz = F.size(ns)
+    firsts = F.when(sz >= 2, F.sequence(F.lit(0), sz - 2)) \
+        .otherwise(F.array().cast("array<int>"))
+    pair_sign = F.flatten(F.transform(
+        firsts,
+        lambda i: F.transform(
+            F.sequence(i + 1, sz - 1),
+            lambda j: F.signum(F.element_at(ns, (j + 1).cast("int"))
+                               - F.element_at(ns, (i + 1).cast("int")))
+            .cast("long"))))
+    return F.aggregate(pair_sign, F.lit(0).cast("long"),
+                       lambda acc, v: acc + v)
+
+
 def q_trend_cells(spark, sf_dir):
     """Emerging hot-spot analysis: Mann-Kendall trend test per hex
     cell over its daily event counts (the space-time companion to the
@@ -4484,9 +4479,9 @@ def q_trend_cells(spark, sf_dir):
     # is bounded by the day range, not the corpus — and derive S and
     # the tie terms from array HOFs. Same exact integers: S sums
     # sign(n_j - n_i) over day-ordered pairs, tiesum sums
-    # k(k-1)(2k+5) over per-value counts; cells with a single day
-    # produce S=0 and are dropped by the same t_days >= 2 filter that
-    # dropped them (via the inner join) before.
+    # k(k-1)(2k+5) over per-value counts; cells with a single day have
+    # no pairs (S=0, see _mann_kendall_s) and are dropped by the same
+    # t_days >= 2 filter that dropped them (via the inner join) before.
     g = (t.groupBy("cell")
          .agg(F.array_sort(F.collect_list(F.struct("day", "n")))
               .alias("a"))
@@ -4497,15 +4492,7 @@ def q_trend_cells(spark, sf_dir):
                  .alias("ns")))
     ns = F.col("ns")
     sz = F.size(ns)
-    pair_sign = F.flatten(F.transform(
-        F.sequence(F.lit(0), sz - 2),
-        lambda i: F.transform(
-            F.sequence(i + 1, sz - 1),
-            lambda j: F.signum(F.element_at(ns, (j + 1).cast("int"))
-                               - F.element_at(ns, (i + 1).cast("int")))
-            .cast("long"))))
-    s_col = F.aggregate(pair_sign, F.lit(0).cast("long"),
-                        lambda acc, v: acc + v)
+    s_col = _mann_kendall_s(ns)
     tiesum = F.aggregate(
         F.transform(F.array_distinct(ns), lambda v: F.size(
             F.filter(ns, lambda x: x == v)).cast("long")),
@@ -5490,19 +5477,8 @@ def q_geofence(spark, sf_dir):
           .filter(F.col("user_id") % 20 == 0))
     lon = (F.col("event_id") * 31 % 70000) / 1000.0 - 15.0
     lat = (F.col("event_id") * 57 % 45000) / 1000.0 + 25.0
-    ring = PIP_ZONES[1]
-    k = len(ring)
-    tot = F.lit(0)
-    for i in range(k):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % k]
-        cond = (((F.lit(float(y1)) > lat) != (F.lit(float(y2)) > lat))
-                & (lon < F.lit(float(x1))
-                   + (lat - F.lit(float(y1)))
-                   * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1))))
-        tot = tot + F.when(cond, 1).otherwise(0)
     d = (ev.select("user_id", "ts", "event_id",
-                   (tot % 2 == 1).cast("int").alias("inside")))
+                   inside_ring(lon, lat, PIP_ZONES[1]).alias("inside")))
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     d = d.withColumn("prev", F.lag("inside").over(w))
     return (d.filter(F.col("prev").isNotNull()

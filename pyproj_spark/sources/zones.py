@@ -55,13 +55,22 @@ def make_zone_rings(n_zones: int = 200, seed: int = 42):
     return zones
 
 
-def zones_df(spark: SparkSession, n_zones: int = 200, seed: int = 42,
-             res: int = cells.DEFAULT_RES) -> DataFrame:
+def zones_table(spark: SparkSession, zones) -> DataFrame:
+    """The zones dimension table (ZONE_SCHEMA) of ``zones`` given as
+    ``[(zone_id, name, [(lon, lat), ...])]``, each ring with its geocell
+    covering at ``cells.DEFAULT_RES``, the resolution ``pip_join``
+    encodes points at."""
     rows = []
-    for zid, name, ring in make_zone_rings(n_zones, seed):
+    for zid, name, ring in zones:
         lons = np.array([p[0] for p in ring])
         lats = np.array([p[1] for p in ring])
-        cov = cells.covering_np(lons, lats, res).tolist()
+        cov = cells.covering_np(lons, lats, cells.DEFAULT_RES).tolist()
         rows.append((zid, name, [{"lon": float(a), "lat": float(b)}
                                  for a, b in ring], cov))
     return spark.createDataFrame(rows, ZONE_SCHEMA)
+
+
+def zones_df(spark: SparkSession, n_zones: int = 200,
+             seed: int = 42) -> DataFrame:
+    """The seeded ``make_zone_rings`` zones as a dimension table."""
+    return zones_table(spark, make_zone_rings(n_zones, seed))

@@ -9,9 +9,9 @@ long the stream runs; arbitrarily late-arriving batches are the
 caller's watermark problem, as with every per-key ordered stateful op.
 
 The point-in-polygon test itself runs BEFORE the stateful stage as
-the same unrolled native even-odd crossing expressions the batch
-query uses (functions, not Python state), so the pandas stage only
-diffs consecutive flags.
+``operators/pip.py::inside_ring``, the unrolled native even-odd
+expressions the batch query uses (functions, not Python state), so the
+pandas stage only diffs consecutive flags.
 """
 
 from __future__ import annotations
@@ -20,28 +20,14 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pyproj_spark.operators.pip import inside_ring
+
 OUT_SCHEMA = "user_id long, event_id long, transition string"
 STATE_SCHEMA = "inside int"
-
-
-def inside_ring(lon: Column, lat: Column, ring) -> Column:
-    """Even-odd crossing test as unrolled native expressions (the
-    exact formula SQL_PIP / q_s2_pip use)."""
-    k = len(ring)
-    tot = F.lit(0)
-    for i in range(k):
-        x1, y1 = ring[i]
-        x2, y2 = ring[(i + 1) % k]
-        cond = (((F.lit(float(y1)) > lat) != (F.lit(float(y2)) > lat))
-                & (lon < F.lit(float(x1))
-                   + (lat - F.lit(float(y1)))
-                   * F.lit(float(x2 - x1)) / F.lit(float(y2 - y1))))
-        tot = tot + F.when(cond, 1).otherwise(0)
-    return (tot % 2 == 1).cast("int")
 
 
 def _transitions_fn(key, pdfs: Iterable[pd.DataFrame],

@@ -196,3 +196,21 @@ def test_kde_raster_matches_brute_force(spark):
     assert got == brute
     # kernel support: a contributing point is within h of the center
     assert all(s <= n * 16000000 for n, s in got.values())
+
+
+def test_mann_kendall_s_short_arrays(spark):
+    """S of trend_cells on arrays of one to four daily counts,
+    including the one-day cell, which has no pairs and gives 0."""
+    from pyspark.sql import functions as F
+
+    from pyproj_spark.queries import _mann_kendall_s
+    cases = [[5], [3, 1], [1, 2, 2, 0], [4, 4]]
+    df = spark.createDataFrame([(i, ns) for i, ns in enumerate(cases)],
+                               "i int, ns array<bigint>")
+    got = [r["s"] for r in df.select(
+        "i", _mann_kendall_s(F.col("ns")).alias("s")).orderBy("i")
+        .collect()]
+    want = [sum((b > a) - (b < a) for i, a in enumerate(ns)
+                for b in ns[i + 1:]) for ns in cases]
+    assert want[0] == 0
+    assert got == want

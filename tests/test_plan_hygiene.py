@@ -633,8 +633,8 @@ def test_flagship_chain_single_arrow_crossing(spark):
 
 
 def test_pip_join_crossing_shapes(spark):
-    # broadcast rings: the exact test is one scalar Arrow UDF; the
-    # ring-as-struct fallback is one mapInArrow pass, never pandas
+    # broadcast rings: the exact test is one scalar Arrow UDF and the
+    # only Python stage, never pandas
     from pyproj_spark.operators.pip import pip_join
     from pyproj_spark.sources.zones import zones_df
     pts = spark.createDataFrame([(1, 2.35, 48.86)], "id long, lon double, "
@@ -642,9 +642,29 @@ def test_pip_join_crossing_shapes(spark):
     zones = zones_df(spark, n_zones=20)
     plan = _plan(pip_join(pts, zones))
     assert plan.count("ArrowEvalPython") == 1
-    plan = _plan(pip_join(pts, zones, broadcast_max_vertices=1))
-    assert plan.count("MapInArrow") == 1
-    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan
+
+
+def test_pip_join_build_is_one_job(spark):
+    # building the join on a fresh zones frame runs the ring collect
+    # and nothing else; reusing the frame runs no job at all
+    from pyproj_spark.operators.pip import pip_join
+    from pyproj_spark.sources.zones import zones_df
+    pts = spark.createDataFrame([(1, 2.35, 48.86)], "id long, lon double, "
+                                "lat double")
+    zones = zones_df(spark, n_zones=20)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for group, want in (("pip-build-fresh", 1), ("pip-build-again", 0)):
+            sc.setJobGroup(group, group)
+            pip_join(pts, zones)
+            # job starts reach the status store through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert len(tracker.getJobIdsForGroup(group)) == want, group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_knn_exact_single_arrow_crossing(spark):

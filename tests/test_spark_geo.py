@@ -135,6 +135,31 @@ def test_pip_join_exact(spark, anchors):
     assert got_set == expect
 
 
+def test_inside_ring_agrees_with_numpy(spark):
+    """The Catalyst and numpy forms of the even-odd test give the same
+    flag for every point of a seeded lon/lat grid (the 2.5-degree
+    lattice, which hits ring vertices and edges exactly, plus a jittered
+    copy) against every PIP_ZONES ring."""
+    from pyproj_spark.operators.pip import inside_ring
+    from pyproj_spark.queries import PIP_ZONES
+    glon, glat = np.meshgrid(np.arange(-180.0, 180.0, 2.5),
+                             np.arange(-85.0, 85.0, 2.5))
+    jit = np.random.default_rng(7).uniform(0.0, 2.5, (2,) + glon.shape)
+    lon = np.concatenate([glon.ravel(), (glon + jit[0]).ravel()])
+    lat = np.concatenate([glat.ravel(), (glat + jit[1]).ravel()])
+    df = spark.createDataFrame(pd.DataFrame(
+        {"id": np.arange(lon.size), "lon": lon, "lat": lat}))
+    got = df.select("id", *[
+        inside_ring(F.col("lon"), F.col("lat"), ring).alias(f"z{zid}")
+        for zid, ring in PIP_ZONES.items()]).orderBy("id").toPandas()
+    for zid, ring in PIP_ZONES.items():
+        want = point_in_ring_np(lon, lat, np.array([p[0] for p in ring]),
+                                np.array([p[1] for p in ring]))
+        assert want.sum() > 100
+        np.testing.assert_array_equal(got[f"z{zid}"].to_numpy() == 1, want,
+                                      err_msg=f"zone {zid}")
+
+
 def test_covering_contains_all_inside_points(spark):
     """Cell covering must be a superset: any point inside the ring has its
     cell in the covering (otherwise the PIP prefilter would drop rows)."""
@@ -347,20 +372,6 @@ def test_jaccard_capped_star_edges_connectivity(spark):
     edges = stars.unionByName(pairs.select("id_a", "id_b"))
     comp = connected_components(edges)
     assert {r["rep"] for r in comp.collect()} == {0}
-
-
-def test_pip_join_struct_fallback_matches_broadcast(spark, anchors):
-    # force the over-threshold struct-column path and require exact
-    # agreement with the broadcast path
-    zdf = zones_df(spark, n_zones=30)
-    fast = set(map(tuple, pip_join(anchors, zdf)
-                   .select("url", "anchor_idx", "zone_id")
-                   .toPandas().to_numpy()))
-    slow = set(map(tuple, pip_join(anchors, zdf, broadcast_max_vertices=1)
-                   .select("url", "anchor_idx", "zone_id")
-                   .toPandas().to_numpy()))
-    assert len(fast) > 0
-    assert fast == slow
 
 
 def test_decode_png_all_filters():
@@ -888,16 +899,14 @@ def tiny_batches(spark):
     "transform_xy", "transform_xy_op_id", "transform_xy_keyed",
     "transform_xyz", "transform_pipeline", "transform_itrf",
     "geod_inverse", "geod_forward", "proj_factors", "normalize_to_4326",
-    "normalize_and_project", "pip_join", "pip_join_struct"])
+    "normalize_and_project", "pip_join"])
 def test_column_kernel_parity(spark, tiny_batches, name):
     p = _parity_points()
     df = _parity_df(spark, p).repartition(3, "id")
-    if name.startswith("pip_join"):
+    if name == "pip_join":
         zrows = make_zone_rings(40)
-        bmv = 1 if name == "pip_join_struct" else 4_000_000
         got = {tuple(r) for r in pip_join(
-            df, zones_df(spark, n_zones=40),
-            broadcast_max_vertices=bmv).select("id", "zone_id").collect()}
+            df, zones_df(spark, n_zones=40)).select("id", "zone_id").collect()}
         want = set()
         for zid, _name, ring in zrows:
             inside = point_in_ring_np(
